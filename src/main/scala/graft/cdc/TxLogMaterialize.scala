@@ -19,7 +19,8 @@ import graft.sources.TxLog
   *
   * MERGE shape (the Delta copy-on-write idea, bucket-granular):
   *  - state rows are hash-bucketed by key (`pmod(xxhash64(table, pk), B)`)
-  *    into one data dir per bucket (`m<version>/__bucket=<b>`), so a batch
+  *    into one data dir per bucket (`m<batch>/<attempt>/__bucket=<b>`,
+  *    the attempt dir unique to one applyBatch call), so a batch
   *    rewrites ONLY the buckets its keys touch — cost O(touched state +
   *    batch), never O(table). Untouched buckets' dirs carry forward
   *    unreferenced-by-name (no copy, no rewrite) exactly like Delta files
@@ -33,7 +34,10 @@ import graft.sources.TxLog
   *    its version committed, VERIFIES the commit carries this stream's
   *    own dir naming (the commitBatch replay-vs-reuse rule), and skips;
   *    a version that is neither the next one nor already-committed means
-  *    a second writer shares the table — loud, never interleaved.
+  *    a second writer shares the table — loud, never interleaved. Two
+  *    writers racing ONE batch id each write their own attempt dir; the
+  *    OCC commit picks one, the loser deletes its dir and fails loudly
+  *    (a crash before the commit leaves an unreferenced attempt dir).
   *
   * Scale: one shuffle per batch on (table_name, pk) over touched-bucket
   * state + batch; bucket count B is the rewrite-granularity knob (more
@@ -50,15 +54,15 @@ object TxLogMaterialize {
   private def bucketOf(nBuckets: Int) =
     pmod(xxhash64(col("table_name"), col("pk")), lit(nBuckets.toLong))
 
-  /** Apply one micro-batch of changes (the [[graft.streaming.Change]]
-    * column shape: lsn, tableName, op, pk, tsUs, value) to the table —
-    * the foreachBatch body. See the class doc for the merge/replay/race
-    * rules. */
   /** The producer id this sink records its delivery watermark under —
     * the TxLog txn (SetTransaction) bookkeeping, so OPTIMIZE/vacuum
     * commits can interleave without colliding with batch numbering. */
   val AppId = "cdc-materialize"
 
+  /** Apply one micro-batch of changes (the [[graft.streaming.Change]]
+    * column shape: lsn, tableName, op, pk, tsUs, value) to the table —
+    * the foreachBatch body. See the class doc for the merge/replay/race
+    * rules. */
   def applyBatch(batch: DataFrame, table: String, batchId: Long,
       nBuckets: Int = 8): Unit = {
     val s = batch.sparkSession
@@ -90,26 +94,26 @@ object TxLogMaterialize {
     val touched = changes.select(bucketOf(nBuckets).as("b"))
       .distinct().collect().map(_.getLong(0)).sorted.toSeq
     val liveNames = st.liveAdds.map(_.name)
-    // overwrite guard (mirrors commitBatch): a live dir under this
-    // batch's parent means a producer without txn records (or a foreign
-    // one) delivered it — the overwrite-write below would destroy live
-    // state before any commit could fail; loud instead
+    // a live dir under this batch's prefix means a producer without txn
+    // records (or a foreign one) delivered it (mirrors commitBatch)
     require(!liveNames.exists(_.startsWith(prefix)),
       s"$table: live dirs under $prefix exist but '$AppId' has no " +
-        s"delivery record for batch $batchId — refusing to overwrite " +
-        "live data (pre-txn table or foreign producer)")
+        s"delivery record for batch $batchId — refusing to merge over " +
+        "them (pre-txn table or foreign producer)")
     // the merge's correctness RESTS on the bucket layout (untouched
     // buckets carry forward by dir name): a compaction that repacked the
     // dirs would make oldDirs miss live state and the merge silently DROP
     // every key outside this batch — loud instead (generic OPTIMIZE must
     // not run on a live materialize sink; its small-file pressure is
-    // already bucket-bounded by construction)
-    val offLayout = liveNames.filterNot(_.matches("""m\d{10}/__bucket=\d+"""))
+    // already bucket-bounded by construction); tables written before
+    // attempt dirs existed have no <attempt> level
+    val offLayout = liveNames.filterNot(
+      _.matches("""m\d{10}/(?:[^/]+/)?__bucket=\d+"""))
     require(offLayout.isEmpty,
       s"$table: live dirs [${offLayout.take(3).mkString(",")}…] break the " +
-        "m<batch>/__bucket=<b> layout this merge sink's bucket-granular " +
-        "carry-forward depends on — a compaction or foreign writer " +
-        "repacked the table; re-bootstrap the sink instead")
+        "m<batch>/<attempt>/__bucket=<b> layout this merge sink's " +
+        "bucket-granular carry-forward depends on — a compaction or " +
+        "foreign writer repacked the table; re-bootstrap the sink instead")
     val oldDirs = touched.flatMap(b =>
       liveNames.filter(_.endsWith(s"/__bucket=$b")).sorted)
     val oldState =
@@ -127,11 +131,11 @@ object TxLogMaterialize {
         col("cur.op").as("op"), col("cur.ts_us").as("ts_us"),
         col("cur.value").as("value"))
       .withColumn("__bucket", bucketOf(nBuckets))
-    val parent = f"m$batchId%010d"
-    // one partitioned write: each touched bucket lands as
-    // m<batch>/__bucket=<b>; the partition column is layout, not data
-    merged.write.mode("overwrite")
-      .partitionBy("__bucket").parquet(s"$table/$parent")
+    // one partitioned write into a dir no other attempt shares: a second
+    // writer racing this batch id must never touch the bytes the OCC
+    // winner commits; the partition column is layout, not data
+    val parent = prefix + java.util.UUID.randomUUID()
+    merged.write.partitionBy("__bucket").parquet(s"$table/$parent")
     val fs = new org.apache.hadoop.fs.Path(table)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     // NUMERIC sort: a lexicographic .sorted would order __bucket=10
@@ -150,9 +154,11 @@ object TxLogMaterialize {
       TxLog.AddFile(dir, stats, rows = Some(nRows))
     }
     val v = st.head.fold(0L)(_ + 1L)
-    require(TxLog.tryCommitActions(s, table, v, adds, oldDirs,
-        schemaDdl = if (batchId == 0) Some(stateSchema.toDDL) else None,
-        txns = Seq(AppId -> batchId)),
+    val committed = TxLog.tryCommitActions(s, table, v, adds, oldDirs,
+      schemaDdl = if (batchId == 0) Some(stateSchema.toDDL) else None,
+      txns = Seq(AppId -> batchId))
+    if (!committed) fs.delete(new org.apache.hadoop.fs.Path(s"$table/$parent"), true)
+    require(committed,
       s"$table: version $v was committed by another writer while this " +
         "batch merged — two writers share one sink table; re-run the " +
         "batch (the delivery watermark makes the retry safe)")

@@ -94,7 +94,8 @@ object Checkpointing {
     * reclaimed by the ContextCleaner.
     *
     * Consumer-side reuse rules, measured on Spark 4.1.2
-    * (tools.CutPartExperiment + the committed r16 plan dumps):
+    * (the test-scope tools.CutPartExperiment + the committed r16 plan
+    * dumps):
     * a join whose other side ALREADY carries its own exchange (an
     * aggregate upstream) streams the artifact without Exchange/Sort iff
     * n >= spark.sql.shuffle.partitions (below that the planner

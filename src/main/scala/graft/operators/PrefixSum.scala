@@ -39,8 +39,9 @@ import org.apache.spark.sql.functions._
 object PrefixSum {
 
   /** Make the `__pid` column safe to consume from BOTH sides of the offset
-    * join-back (r16 — the PsProbe finding). The offsets derive from the
-    * ranged table and join back onto it, so the analyzer's self-join
+    * join-back (r16 — the finding of tools.PsProbe, test scope). The
+    * offsets derive from the ranged table and join back onto it, so the
+    * analyzer's self-join
     * attribute dedup re-instantiates one side's leaves with fresh exprIds.
     * For every ordinary input the re-instantiated subtree still
     * `sameResult`s the leased cache entry, both sides read ONE cached RDD,
@@ -53,7 +54,8 @@ object PrefixSum {
     * the offsets side silently recomputes its own range exchange, and
     * RangePartitioner's rdd.id-seeded boundary sampling gives the two
     * executions DIFFERENT pid mappings: silently wrong prefix sums
-    * (measured: 2284/2991 rows wrong in tools.PsProbe). For that input
+    * (measured: 2284/2991 rows wrong in the test-scope tools.PsProbe,
+    * `sbt "Test/runMain graft.tools.PsProbe"`). For that input
     * class the ranged table is eagerly cut instead: `__pid` becomes
     * materialized DATA in a plain LogicalRDD (which dedups safely — the
     * re-instantiated leaf scans the same RDD), at the cost of one extra

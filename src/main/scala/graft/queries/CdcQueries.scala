@@ -768,16 +768,13 @@ object CdcQueries {
         val tmp = graft.streaming.StreamGate
           .sessionTempDir("graft-txlog-mat") { t =>
             val tbl = s"$t/table"
-            val schema = org.apache.spark.sql.Encoders
-              .product[graft.streaming.Change].schema
+            val enc = org.apache.spark.sql.Encoders
+              .product[graft.streaming.Change]
             def runOnce(ck: String): Unit = {
-              val q = s.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1).parquet(feedDir)
-                .writeStream.option("checkpointLocation", ck)
-                .foreachBatch { (b: DataFrame, id: Long) =>
-                  graft.cdc.TxLogMaterialize.applyBatch(b, tbl, id)
-                }
-                .start()
+              val q = graft.streaming.CdcStream.materializeSnapshot(
+                s.readStream.schema(enc.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(feedDir).as(enc),
+                tbl, ck)
               try q.processAllAvailable() finally q.stop()
             }
             runOnce(s"$t/ck1")

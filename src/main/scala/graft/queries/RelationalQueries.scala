@@ -2302,7 +2302,7 @@ object RelationalQueries {
       // second time): the joint (flag, x, y) multiplicity table is built
       // once and lineage-cut; both marginals and the pair table derive
       // from it, so everything downstream aggregates the cut artifact.
-      // NOT cutPartitioned (r16 PsProbe finding): a declared-layout
+      // NOT cutPartitioned (r16 PsProbe finding, test scope): a declared-layout
       // LogicalRDD fails sameResult after the self-join attribute dedup
       // inside PrefixSum's offset join-back, so the CacheLease substitution
       // misses on one side, both sides run their OWN rdd.id-seeded range

@@ -2,7 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+
+import graft.cdc.TxLogMaterialize
 
 /** A change event as it arrives on a stream — the reference's
   * HandleFunc tuple (postrack.go:35) with the row images flattened to the
@@ -178,319 +180,22 @@ object CdcStream {
   }
 
   /** Continuously materialize the current-state view of a change stream
-    * into a parquet snapshot directory — the complete postrack consumer:
-    * capture feed in, queryable table out (read via `readSnapshot`).
-    *
-    * Each micro-batch merges (full-outer on pk, highest LSN wins) into the
-    * stored snapshot. Tombstoned keys stay in storage as tombstone rows —
-    * replay-safe deletes — and are hidden by the `readSnapshot` view.
-    *
-    * Layout: versioned subdirs (`v<batchId>`) under `snapshotDir` with a
-    * `_current` pointer file naming the live one. The merge WRITES A FRESH
-    * version dir and only then swaps the pointer (file rename with
-    * OVERWRITE — atomic on HDFS and local FS), so the batch never
-    * overwrites the data it is reading: a lost cached block, a lineage
-    * recompute, or a crash mid-write can at worst leave an orphan version
-    * dir — the previous snapshot stays intact and readable throughout.
-    * Superseded versions are deleted after the swap. The
-    * rewrite-per-batch is the plain-parquet price; on a real deployment the
-    * same foreachBatch body targets an ACID table format's MERGE (which
-    * owns the same version-and-pointer discipline) and becomes an O(delta)
-    * upsert. Exactly-once: checkpointed source offsets + idempotent
-    * per-batchId version dirs. */
+    * into a TxLog table — the complete postrack consumer: capture feed
+    * in, queryable table out. Each micro-batch is MERGED by
+    * [[graft.cdc.TxLogMaterialize.applyBatch]] (per-key highest LSN wins,
+    * DELETEs kept as storage tombstones, one version per batch), so a
+    * checkpoint-recovery replay verifies and skips: exactly-once from
+    * checkpointed source offsets plus batch-keyed commits. Read the live
+    * rows (at any version) with `TxLogMaterialize.snapshot`, tombstones
+    * included with `TxLog.readWithLogSchema`. */
   def materializeSnapshot(
-      changes: Dataset[Change], snapshotDir: String, checkpointDir: String): StreamingQuery =
-    changes.writeStream
+      changes: Dataset[Change], table: String, checkpointDir: String): StreamingQuery =
+    changes.toDF().writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: Dataset[Change], batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val incoming = latestOfBatch(batch)
-        // all paths via the Hadoop FS API so object-store / HDFS snapshot
-        // dirs work, not just the local filesystem
-        val base = new org.apache.hadoop.fs.Path(snapshotDir)
-        val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val current = currentVersion(fs, base)
-        // Replay guard: if the pointer already names THIS batch's version,
-        // a previous run crashed after the swap but before the streaming
-        // commit log recorded the batch. The merge is already fully applied
-        // — and re-running it would read and overwrite the same dir — so
-        // the replay is a no-op.
-        if (current.exists(_.getName == s"v$batchId")) ()
-        else {
-        // explicit schema: a version dir written from an empty batch has no
-        // part files, so inference would fail where "empty snapshot" is meant
-        val existing = current match {
-          case Some(dir) => spark.read
-            .schema(implicitly[org.apache.spark.sql.Encoder[Snapshot]].schema)
-            .parquet(dir.toString).as[Snapshot]
-          case None => spark.emptyDataset[Snapshot]
-        }
-        val merged = existing.toDF("e_table", "e_pk", "e_lsn", "e_op", "e_value", "e_tombstoned")
-          .join(incoming.toDF("i_table", "i_pk", "i_lsn", "i_op", "i_value", "i_tombstoned"),
-            col("e_table") === col("i_table") && col("e_pk") === col("i_pk"), "full_outer")
-          .select(
-            coalesce(col("i_table"), col("e_table")).as("table"),
-            coalesce(col("i_pk"), col("e_pk")).as("pk"),
-            when(col("i_lsn").isNotNull && (col("e_lsn").isNull || col("i_lsn") > col("e_lsn")),
-              struct(col("i_lsn").as("lsn"), col("i_op").as("op"),
-                col("i_value").as("value"), col("i_tombstoned").as("tombstoned")))
-              .otherwise(struct(col("e_lsn").as("lsn"), col("e_op").as("op"),
-                col("e_value").as("value"), col("e_tombstoned").as("tombstoned")))
-              .as("r"))
-          .select(col("table"), col("pk"), col("r.*"))
-          .toDF("table", "pk", "lsn", "op", "value", "tombstoned")
-          .as[Snapshot]
-        // write the merged state to a FRESH version dir (overwrite handles
-        // a partial dir left by a crashed run of this same batchId), then
-        // swap the pointer and drop superseded versions
-        val next = new org.apache.hadoop.fs.Path(base, s"v$batchId")
-        merged.write.mode("overwrite").parquet(next.toString)
-        // CAS from the version this merge READ: a concurrent writer that
-        // advanced the pointer since would have its changes silently
-        // dropped by our full-outer merge — fail the batch loudly instead
-        // (one writer per snapshot dir is the deployment contract; the CAS
-        // turns a misconfigured second writer into an error, not a lost
-        // update)
-        if (!swapPointerIfCurrent(spark, fs, base, current.map(_.getName), next.getName))
-          throw new IllegalStateException(
-            s"snapshot $base advanced past ${current.map(_.getName)} while batch " +
-              s"$batchId merged — concurrent writer detected, lost update prevented")
-        }
-        ()
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        TxLogMaterialize.applyBatch(batch, table, batchId)
       }
       .start()
-
-  private val PointerFile = "_current"
-
-  /** The live version dir, resolved through the pointer file. A pointer
-    * naming a MISSING dir is corruption (eventual-consistency lag, manual
-    * cleanup) and throws loudly — treating it as "no snapshot yet" would
-    * make the next merge silently reset state to empty, discarding every
-    * materialized key and tombstone. */
-  private def currentVersion(
-      fs: org.apache.hadoop.fs.FileSystem,
-      base: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] = {
-    val ptr = new org.apache.hadoop.fs.Path(base, PointerFile)
-    if (!fs.exists(ptr)) None
-    else {
-      val in = fs.open(ptr)
-      val name = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      val dir = new org.apache.hadoop.fs.Path(base, name)
-      if (!fs.exists(dir)) throw new java.io.FileNotFoundException(
-        s"snapshot pointer $ptr names missing version dir $dir — refusing to " +
-          "treat a corrupted snapshot as empty")
-      Some(dir)
-    }
-  }
-
-  /** How many superseded snapshot versions to retain after a pointer swap.
-    * A reader that resolved `_current` just before the swap may still be
-    * mid-scan on the previous version; keeping a grace window of old
-    * versions lets it finish instead of failing on a deleted dir. Bounded,
-    * so storage stays O(retained × snapshot) — the same retention idea an
-    * ACID table format's VACUUM window provides. */
-  private val RetainedVersions = 2
-
-  /** COMPARE-AND-SWAP pointer update (r11 — VERDICT item 7): advance
-    * `_current` to `versionName` only if it still names `expected` (None =
-    * no snapshot yet). The check-and-swap runs inside an exclusive lock
-    * file (`fs.create(…, overwrite = false)` is atomic on HDFS and local
-    * FS), so two writers that both merged from the same base version
-    * cannot both win: the second CAS sees the advanced pointer and returns
-    * false, and its merge — which silently DROPPED the first writer's
-    * changes — never becomes visible. Lost update impossible by
-    * construction (spec'd with a two-writer race). A lock held by a LIVE
-    * writer times out loudly rather than being stolen — breaking a lock
-    * under a live writer is the one thing worse than waiting; only a
-    * crashed writer's corpse (mtime past the lease window) is broken, and
-    * breaking is serialized through a create-exclusive breaker tombstone
-    * so racing breakers can never delete a fresh lock (see below). */
-  private[graft] def swapPointerIfCurrent(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, base: org.apache.hadoop.fs.Path,
-      expected: Option[String], versionName: String): Boolean = {
-    val lockPath = new org.apache.hadoop.fs.Path(base, "_pointer.lock")
-    fs.mkdirs(base)
-    // Atomic create-exclusive PER SCHEME: on HDFS `create(…, overwrite =
-    // false)` is atomic at the NameNode, but RawLocalFileSystem implements
-    // it as exists-then-create — a TOCTOU window two racing local writers
-    // BOTH pass (observed: both entered the critical section and the spec's
-    // losing thread crashed on the vanished tmp file). Local goes through
-    // NIO createFile (O_EXCL — kernel-atomic).
-    val isLocal = fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem] ||
-      fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem]
-    def tryCreateExclusive(p: org.apache.hadoop.fs.Path): Boolean =
-      if (isLocal) {
-        try {
-          java.nio.file.Files.createFile(
-            java.nio.file.Paths.get(p.toUri.getPath))
-          true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      } else {
-        try { fs.create(p, false).close(); true }
-        catch { case _: java.io.IOException => false }
-      }
-    def tryLock(): Boolean = tryCreateExclusive(lockPath)
-    def ageOf(p: org.apache.hadoop.fs.Path): Long =
-      try System.currentTimeMillis - fs.getFileStatus(p).getModificationTime
-      catch { case _: java.io.IOException => -1L } // vanished
-    // Lease recovery for a CRASHED writer's orphan lock (a kill between
-    // create and the finally-delete): a live writer holds the lock only
-    // for the milliseconds of the pointer check + rename, so a lock older
-    // than the stale window is a corpse with certainty bar extreme clock
-    // skew — break it ONCE, loudly, then contend normally. A fresh lock is
-    // never stolen (stealing under a live writer is the one thing worse
-    // than waiting), so a transient crash costs one stale window instead
-    // of permanently failing every subsequent batch.
-    //
-    // BREAKING IS SERIALIZED through a create-exclusive breaker tombstone
-    // (r12, closing the TOCTOU a review found): without it, a contender
-    // that stat'd the corpse could fs.delete AFTER another breaker already
-    // broke it and a third writer created a FRESH lock — deleting the live
-    // lock and letting two writers into the check-and-swap. And every
-    // REMOVAL here — the corpse itself AND an orphaned breaker — goes
-    // through [[stealStale]]: rename to a unique per-process tomb (atomic;
-    // exactly one stealer wins), then verify the TOMB's mtime (rename
-    // preserves it, and the tomb is exclusively ours, so the verify cannot
-    // race) before deleting; a tomb that turns out FRESH — the path was
-    // broken and re-taken between our stat and our rename — is renamed
-    // straight back. So a fresh lock/breaker is never DELETED by a racing
-    // breaker; the residual exposure is the microseconds a mistakenly
-    // renamed fresh file spends off-path before restore, which requires a
-    // crashed breaker plus three interleaved contenders inside one stat
-    // window — and is bounded by the same lease assumption (staleMs ≫ the
-    // milliseconds a live section lasts) the whole recovery rests on.
-    val staleMs = 120000L
-    val breakerPath = new org.apache.hadoop.fs.Path(base, "_pointer.lock.breaker")
-    def stealStale(p: org.apache.hadoop.fs.Path, what: String): Boolean = {
-      val tomb = new org.apache.hadoop.fs.Path(base,
-        s"${p.getName}.tomb-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-      val renamed = try fs.rename(p, tomb)
-      catch { case _: java.io.IOException => false }
-      if (!renamed) false // another stealer won, or the path vanished
-      else if (ageOf(tomb) > staleMs) {
-        System.err.println(s"[snapshot] broke stale $what $p " +
-          s"(lease ${staleMs}ms) — a crashed writer left it")
-        fs.delete(tomb, false)
-        true
-      } else {
-        // we grabbed a FRESH file (broken + re-taken since our stat):
-        // restore it — but check the destination FIRST: local rename(2)
-        // silently OVERWRITES an existing target (HDFS rename fails
-        // instead), and a third writer may have re-created the path; if
-        // it exists, the new occupant stands and our copy is dropped
-        // (its owner's finally-delete tolerates a missing path)
-        if (fs.exists(p) || !fs.rename(tomb, p)) fs.delete(tomb, false)
-        false
-      }
-    }
-    // reap ownerless tombs a stealer crashed between rename and delete —
-    // a tomb is a copy nobody references, so deleting one never affects
-    // mutual exclusion; lease-aged like everything else here
-    def reapTombs(): Unit =
-      try fs.listStatus(base)
-        .filter(st => st.getPath.getName.contains(".tomb-") &&
-          System.currentTimeMillis - st.getModificationTime > staleMs)
-        .foreach(st => fs.delete(st.getPath, false))
-      catch { case _: java.io.IOException => () }
-    var brokeStale = false
-    val deadline = System.currentTimeMillis + 30000
-    while (!tryLock()) {
-      if (!brokeStale && ageOf(lockPath) > staleMs) {
-        reapTombs()
-        if (ageOf(breakerPath) > staleMs) stealStale(breakerPath, "breaker")
-        if (tryCreateExclusive(breakerPath)) {
-          try {
-            // re-stat INSIDE the breaker section; the delete itself is
-            // still rename-verified — defense in depth against a second
-            // breaker that slipped past a broken-and-relocked window
-            if (ageOf(lockPath) > staleMs) stealStale(lockPath, "pointer lock")
-            ()
-          } finally {
-            fs.delete(breakerPath, false)
-            ()
-          }
-          brokeStale = true
-        }
-      }
-      if (System.currentTimeMillis > deadline)
-        throw new IllegalStateException(
-          s"pointer lock $lockPath held past the deadline by a LIVE writer " +
-            "(fresh mtime) — two concurrent writers on one snapshot dir is a " +
-            "deployment error; refusing to steal")
-      Thread.sleep(20)
-    }
-    try {
-      if (currentVersion(fs, base).map(_.getName) != expected) false
-      else { swapPointer(spark, fs, base, versionName); true }
-    } finally {
-      fs.delete(lockPath, false)
-      ()
-    }
-  }
-
-  /** Atomically point `_current` at `versionName`, then delete superseded
-    * version dirs beyond a retention window. The pointer swap is a file
-    * rename with OVERWRITE — atomic on HDFS and local FS — so readers
-    * resolve either the old or the new version, never a partial state; a
-    * reader mid-scan on the previous version survives the swap because the
-    * last [[RetainedVersions]] dirs outlive it (readers lagging more than
-    * that behind the writer must re-resolve the pointer). */
-  private def swapPointer(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, base: org.apache.hadoop.fs.Path,
-      versionName: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(base, PointerFile + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(versionName.getBytes("UTF-8")) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      base.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, new org.apache.hadoop.fs.Path(base, PointerFile),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    // versions are v<batchId>: retain the numerically-latest few (the live
-    // one included), delete the rest
-    val versions = fs.listStatus(base).filter(st =>
-        st.isDirectory && st.getPath.getName.matches("v\\d+"))
-      .sortBy(st => -st.getPath.getName.drop(1).toLong)
-    versions.drop(RetainedVersions).foreach(st =>
-      if (st.getPath.getName != versionName) fs.delete(st.getPath, true))
-  }
-
-  /** Resolve the live version dir under a snapshot base dir — bare-storage
-    * access for operations that must see tombstone rows too. */
-  def currentSnapshotDir(spark: SparkSession, snapshotDir: String): String = {
-    val base = new org.apache.hadoop.fs.Path(snapshotDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    currentVersion(fs, base).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"no materialized snapshot version under $snapshotDir")).toString
-  }
-
-  /** Live (non-tombstoned) view of a materialized snapshot directory.
-    * Tombstones are RETAINED in storage so that an at-least-once replay of
-    * a pre-delete event can never win the LSN merge and resurrect a deleted
-    * row; this is the read path that hides them. */
-  def readSnapshot(spark: SparkSession, snapshotDir: String): Dataset[Snapshot] = {
-    import spark.implicits._
-    val base = new org.apache.hadoop.fs.Path(snapshotDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = currentVersion(fs, base).getOrElse(
-      throw new java.io.FileNotFoundException(
-        s"no materialized snapshot version under $snapshotDir"))
-    spark.read.schema(implicitly[org.apache.spark.sql.Encoder[Snapshot]].schema)
-      .parquet(dir.toString).as[Snapshot].filter((s: Snapshot) => !s.tombstoned)
-  }
-
-  /** Batch-local reduction: highest LSN per (table, pk) within one
-    * micro-batch. */
-  private def latestOfBatch(batch: Dataset[Change]): Dataset[Snapshot] = {
-    import batch.sparkSession.implicits._
-    batch.groupByKey(c => (c.tableName, c.pk)).mapGroups { (key, it) =>
-      val c = it.maxBy(_.lsn)
-      Snapshot(key._1, key._2, c.lsn, c.op, c.value, tombstoned = c.op == "DELETE")
-    }
-  }
 
   /** File-drop CDC source: a directory where the capture side appends
     * parquet change batches becomes a streaming DataFrame with the Change

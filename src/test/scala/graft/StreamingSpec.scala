@@ -4,6 +4,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.cdc.TxLogMaterialize
+import graft.sources.TxLog
 import graft.streaming.{AttrEvent, Attribution, CdcStream, Change, FunnelEvent, SegmentKey, SketchRow, Snapshot, StageReach, TransEvent, Transition}
 
 class StreamingSpec extends AnyFunSuite with SparkTestBase {
@@ -463,12 +465,18 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
+  /** pk → value of the live rows a materializeSnapshot table holds. */
+  private def liveValues(table: String, asOf: Option[Long] = None) =
+    TxLogMaterialize.snapshot(spark, table, asOf).select("pk", "value")
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
   test("materializeSnapshot: change stream → queryable parquet table") {
     implicit val sqlCtx = spark.sqlContext
     val snap = java.nio.file.Files.createTempDirectory("snapdir").toString + "/t"
     val ck = java.nio.file.Files.createTempDirectory("snapck").toString
     val input = MemoryStream[Change]
     val q = CdcStream.materializeSnapshot(input.toDS(), snap, ck)
+    def live(asOf: Option[Long] = None) = liveValues(snap, asOf)
     try {
       input.addData(
         Change(1, "users", "INSERT", 1, 100, 10.0),
@@ -479,87 +487,17 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         Change(4, "users", "DELETE", 2, 400, 0.0),
         Change(5, "users", "INSERT", 3, 500, 30.0))
       q.processAllAvailable()
-      val got = CdcStream.readSnapshot(spark, snap).collect()
-        .map(s => s.pk -> s.value).toMap
-      assert(got == Map(1L -> 11.0, 3L -> 30.0)) // 2 hidden by tombstone
+      assert(live() == Map(1L -> 11.0, 3L -> 30.0)) // 2 hidden by tombstone
       // the tombstone row itself is RETAINED in storage (replay safety)
-      val stored = spark.read
-        .parquet(CdcStream.currentSnapshotDir(spark, snap)).as[Snapshot].collect()
-      assert(stored.exists(s => s.pk == 2L && s.tombstoned))
-      // version-and-pointer layout: a bounded retention window of version
-      // dirs survives each swap (a reader mid-scan on the previous version
-      // must not fail on a deleted dir), and the pointer names the newest
+      assert(TxLog.readWithLogSchema(spark, snap, None)
+        .filter($"pk" === 2L && $"op" === "DELETE").count() == 1L)
+      // time travel: each batch is a version, and the previous batch's
+      // version stays readable after the next one commits
       input.addData(Change(6, "users", "UPDATE", 3, 600, 31.0))
       q.processAllAvailable()
-      val vdirs = new java.io.File(snap).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("v"))
-        .map(_.getName).sortBy(_.drop(1).toLong)
-      assert(vdirs.length == 2, // RetainedVersions
-        s"expected a 2-version retention window, got ${vdirs.mkString(", ")}")
-      assert(CdcStream.currentSnapshotDir(spark, snap).endsWith("/" + vdirs.last))
+      assert(live() == Map(1L -> 11.0, 3L -> 31.0))
+      assert(live(Some(1L)) == Map(1L -> 11.0, 3L -> 30.0))
     } finally q.stop()
-  }
-
-  test("snapshot pointer CAS: two writers racing from the same base — exactly one wins") {
-    // lost-update impossibility (r11): both writers merged from v0, both
-    // wrote a candidate version, both CAS from expected v0 concurrently.
-    // The lock serializes the check-and-swap; whoever runs second sees the
-    // advanced pointer and LOSES — its merge (which never saw the winner's
-    // changes) cannot become visible. A subsequent writer that re-reads
-    // the new current succeeds; a stale-expected CAS always fails.
-    val base = new org.apache.hadoop.fs.Path(
-      java.nio.file.Files.createTempDirectory("snapcas").toString + "/t")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mkVersion(name: String): Unit = {
-      fs.mkdirs(new org.apache.hadoop.fs.Path(base, name))
-      ()
-    }
-    mkVersion("v0")
-    assert(CdcStream.swapPointerIfCurrent(spark, fs, base, None, "v0"),
-      "initial swap from no-snapshot must succeed")
-    mkVersion("v1a"); mkVersion("v1b")
-    val results = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-    val threads = Seq("v1a", "v1b").map { v =>
-      new Thread(() => results.put(v,
-        CdcStream.swapPointerIfCurrent(spark, fs, base, Some("v0"), v)))
-    }
-    threads.foreach(_.start()); threads.foreach(_.join(30000))
-    val wins = Seq("v1a", "v1b").filter(results.get(_))
-    assert(wins.size == 1, s"exactly one racing writer must win, got $results")
-    assert(CdcStream.currentSnapshotDir(spark, base.toString).endsWith("/" + wins.head),
-      "the pointer must name the winner")
-    // the loser retries from the NEW current and succeeds; a stale CAS fails
-    val loser = Seq("v1a", "v1b").filterNot(_ == wins.head).head
-    assert(!CdcStream.swapPointerIfCurrent(spark, fs, base, Some("v0"), loser),
-      "a stale-expected CAS must keep failing")
-    mkVersion("v2")
-    assert(CdcStream.swapPointerIfCurrent(spark, fs, base, Some(wins.head), "v2"))
-    assert(CdcStream.currentSnapshotDir(spark, base.toString).endsWith("/v2"))
-    // the lock never lingers after a completed CAS
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(base, "_pointer.lock")))
-    // lease recovery: a crashed writer's orphan lock (old mtime) is broken
-    // once, loudly, instead of permanently failing every later batch
-    val lock = new org.apache.hadoop.fs.Path(base, "_pointer.lock")
-    fs.create(lock, true).close()
-    fs.setTimes(lock, System.currentTimeMillis - 600000L, -1) // 10 min old
-    mkVersion("v3")
-    assert(CdcStream.swapPointerIfCurrent(spark, fs, base, Some("v2"), "v3"),
-      "a stale (crashed-writer) lock must be broken and the CAS proceed")
-    assert(CdcStream.currentSnapshotDir(spark, base.toString).endsWith("/v3"))
-    assert(!fs.exists(lock))
-    // breaking is SERIALIZED through a breaker tombstone (r12): a crash
-    // mid-break orphans BOTH files — the breaker gets the same lease rule,
-    // so the next writer still recovers, and neither file lingers after
-    val breaker = new org.apache.hadoop.fs.Path(base, "_pointer.lock.breaker")
-    fs.create(lock, true).close()
-    fs.create(breaker, true).close()
-    fs.setTimes(lock, System.currentTimeMillis - 600000L, -1)
-    fs.setTimes(breaker, System.currentTimeMillis - 600000L, -1)
-    mkVersion("v4")
-    assert(CdcStream.swapPointerIfCurrent(spark, fs, base, Some("v3"), "v4"),
-      "an orphaned breaker must be lease-broken like the lock itself")
-    assert(CdcStream.currentSnapshotDir(spark, base.toString).endsWith("/v4"))
-    assert(!fs.exists(lock) && !fs.exists(breaker))
   }
 
   test("scd2Stream emits each closed interval exactly once, across batches") {
@@ -591,17 +529,26 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     Seq(Change(1, "users", "INSERT", 1, 100, 1.0)).toDS()
       .write.mode("append").parquet(src)
     val q1 = CdcStream.materializeSnapshot(CdcStream.fileSource(spark, src), snap, ck)
-    try { q1.processAllAvailable() } finally q1.stop()
+    val q1End = try {
+      q1.processAllAvailable()
+      q1.lastProgress.sources.head.endOffset
+    } finally q1.stop()
     // second incarnation, same checkpoint: must pick up only the new batch
     Seq(Change(2, "users", "UPDATE", 1, 200, 2.0)).toDS()
       .write.mode("append").parquet(src)
     val q2 = CdcStream.materializeSnapshot(CdcStream.fileSource(spark, src), snap, ck)
     try {
       q2.processAllAvailable()
-      val got = CdcStream.readSnapshot(spark, snap).collect().toSeq
-      assert(got == Seq(Snapshot("users", 1L, 2L, "UPDATE", 2.0, false)))
-      // offsets resumed: the restarted run processed exactly the delta batch
-      assert(q2.recentProgress.map(_.numInputRows).sum == 1L)
+      val got = TxLogMaterialize.snapshot(spark, snap)
+        .select("table_name", "pk", "lsn", "op", "value")
+        .as[(String, Long, Long, String, Double)].collect().toSeq
+      assert(got == Seq(("users", 1L, 2L, "UPDATE", 2.0)))
+      // offsets resumed: the restarted run processed exactly the delta
+      // batch, starting where the first run ended (not numInputRows: the
+      // sink evaluates each batch twice, and the count follows)
+      val ran = q2.recentProgress.filter(_.numInputRows > 0)
+      assert(ran.map(_.batchId).toSeq == Seq(1L))
+      assert(ran.head.sources.head.startOffset == q1End)
     } finally q2.stop()
   }
 
@@ -628,10 +575,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       .select($"lsn", $"table_name".as("tableName"), $"op", $"pk",
         $"ts_us".as("tsUs"), $"value").as[Change]
     val q = CdcStream.materializeSnapshot(changes, snap, ck)
+    def live() = liveValues(snap)
     try {
       q.processAllAvailable()
-      assert(CdcStream.readSnapshot(spark, snap).collect()
-        .map(s => s.pk -> s.value).toMap == Map(1L -> 10.0, 2L -> 20.0))
+      assert(live() == Map(1L -> 10.0, 2L -> 20.0))
       // batch 2: update pk 1, delete pk 2 — decoded against the registry
       // checkpointed from batch 1
       Seq(
@@ -639,8 +586,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         5L -> PgOutput.encode(DeleteMsg(500, 'O'.toByte, tup(2, 400, 0.0))))
         .toDF("lsn", "data").write.mode("append").parquet(framesDir)
       q.processAllAvailable()
-      assert(CdcStream.readSnapshot(spark, snap).collect()
-        .map(s => s.pk -> s.value).toMap == Map(1L -> 11.0))
+      assert(live() == Map(1L -> 11.0))
     } finally q.stop()
   }
 

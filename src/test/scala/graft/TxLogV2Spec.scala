@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, udf}
 
 /** The r12 TxLog surface: data skipping (stats-carrying adds + predicate
   * file pruning — results identical, fewer files opened), schema-in-log
@@ -378,29 +378,35 @@ class TxLogV2Spec extends AnyFunSuite with SparkTestBase {
 
   test("TxLogMaterialize rewrites ONLY the buckets a batch touches — " +
       "untouched bucket dirs carry forward unreferenced-by-name") {
-    val t = freshTable()
-    // spread keys over buckets (nBuckets=8): land a wide batch first
-    TxLogMaterialize.applyBatch(
-      changes((1L to 40L).map(k =>
-        (k, "users", "INSERT", k, 100L + k, k.toDouble)): _*), t, 0L)
-    val live0 = TxLog.liveAdds(spark, t)
-    assert(live0.forall(_.name.startsWith("m0000000000/")))
-    assert(live0.forall(_.stats.contains("pk")),
-      "every bucket dir records its pk envelope for point-lookup skipping")
-    // batch 1 touches ONE key → one bucket rewritten, the rest carried
-    TxLogMaterialize.applyBatch(
-      changes((1000L, "users", "UPDATE", 7L, 900L, 77.0)), t, 1L)
-    val c1 = TxLog.commitAt(spark, t, 1L)
-    assert(c1.adds.size == 1 && c1.removes.size == 1,
-      s"one-key batch must rewrite exactly one bucket, " +
-        s"got adds=${c1.adds.size} removes=${c1.removes.size}")
-    val live1 = TxLog.liveFiles(spark, t)
-    assert(live1.count(_.startsWith("m0000000000/")) == live0.size - 1,
-      "all but the touched bucket still live from batch 0's dirs")
-    // the merge preserved every key
-    assert(TxLogMaterialize.snapshot(spark, t).count() == 40L)
-    assert(TxLogMaterialize.snapshot(spark, t)
-      .filter(col("pk") === 7L).select("value").head().getDouble(0) == 77.0)
+    // 16 buckets reach __bucket=10+, where a lexicographic dir sort would
+    // disagree with the numeric touched set
+    for (nb <- Seq(8, 16)) {
+      val t = freshTable()
+      // spread keys over buckets: land a wide batch first
+      TxLogMaterialize.applyBatch(
+        changes((1L to 40L).map(k =>
+          (k, "users", "INSERT", k, 100L + k, k.toDouble)): _*), t, 0L, nb)
+      val live0 = TxLog.liveAdds(spark, t)
+      assert(live0.forall(_.name.startsWith("m0000000000/")))
+      assert(live0.forall(_.stats.contains("pk")),
+        "every bucket dir records its pk envelope for point-lookup skipping")
+      if (nb == 16) assert(live0.exists(_.name.matches(""".*/__bucket=1\d""")),
+        s"no bucket >= 10 written: ${live0.map(_.name)}")
+      // batch 1 touches ONE key → one bucket rewritten, the rest carried
+      TxLogMaterialize.applyBatch(
+        changes((1000L, "users", "UPDATE", 7L, 900L, 77.0)), t, 1L, nb)
+      val c1 = TxLog.commitAt(spark, t, 1L)
+      assert(c1.adds.size == 1 && c1.removes.size == 1,
+        s"one-key batch must rewrite exactly one bucket (nBuckets=$nb), " +
+          s"got adds=${c1.adds.size} removes=${c1.removes.size}")
+      val live1 = TxLog.liveFiles(spark, t)
+      assert(live1.count(_.startsWith("m0000000000/")) == live0.size - 1,
+        "all but the touched bucket still live from batch 0's dirs")
+      // the merge preserved every key
+      assert(TxLogMaterialize.snapshot(spark, t).count() == 40L)
+      assert(TxLogMaterialize.snapshot(spark, t)
+        .filter(col("pk") === 7L).select("value").head().getDouble(0) == 77.0)
+    }
   }
 
   test("TxLogMaterialize is loud on misconfiguration: a foreign table, " +
@@ -419,5 +425,64 @@ class TxLogV2Spec extends AnyFunSuite with SparkTestBase {
     val e2 = intercept[IllegalArgumentException](TxLogMaterialize.applyBatch(
       changes((1L, "users", "INSERT", 1L, 1L, 1.0)), t2, 2L))
     assert(e2.getMessage.contains("batches were skipped"))
+  }
+
+  test("TxLogMaterialize: two writers racing one batch id — exactly one " +
+      "version commits, the loser fails loudly, its retry skips as a " +
+      "replay, and the snapshot holds exactly the winner's rows") {
+    val t = freshTable()
+    val base = Seq((1L, "users", "INSERT", 1L, 100L, 1.0),
+      (2L, "users", "INSERT", 2L, 110L, 2.0))
+    TxLogMaterialize.applyBatch(changes(base: _*), t, 0L)
+    // disjoint keys, so the two merges touch different bucket sets
+    val sides = Seq(
+      (10L, "users", "UPDATE", 1L, 200L, 1.5) +:
+        (3L to 20L).map(k => (10L + k, "users", "INSERT", k, 200L + k, k.toDouble)),
+      (10L, "users", "DELETE", 2L, 200L, 0.0) +:
+        (21L to 40L).map(k => (10L + k, "users", "INSERT", k, 200L + k, -k.toDouble)))
+    // each side's first evaluation of its batch waits for the other's:
+    // both writers have planned against the same head before either merges
+    val meet = udf((pk: Long, side: Int) => { MaterializeRace.meet(side); pk })
+      .asNondeterministic()
+    def batch(i: Int) =
+      changes(sides(i): _*).withColumn("pk", meet(col("pk"), lit(i)))
+    MaterializeRace.reset()
+    val outcomes = new Array[scala.util.Try[Unit]](2)
+    val threads = sides.indices.map(i => new Thread(() =>
+      outcomes(i) = scala.util.Try(TxLogMaterialize.applyBatch(batch(i), t, 1L))))
+    threads.foreach(_.start()); threads.foreach(_.join(120000))
+    assert(!MaterializeRace.missed, "the writers never overlapped")
+    assert(TxLog.currentVersion(spark, t).contains(1L),
+      "exactly one version commits")
+    val winners = outcomes.indices.filter(outcomes(_).isSuccess)
+    assert(winners.size == 1, s"exactly one writer must win: ${outcomes.toSeq}")
+    val (win, lose) = (winners.head, 1 - winners.head)
+    assert(outcomes(lose).failed.get.getMessage.contains("two writers share"),
+      s"the loser must fail loudly: ${outcomes(lose)}")
+    def snap() = TxLogMaterialize.snapshot(spark, t)
+      .select("pk", "lsn", "op", "value").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3))).toSet
+    val expected = (base ++ sides(win)).groupBy(_._4).values.map(_.maxBy(_._1))
+      .filter(_._3 != "DELETE").map(r => (r._4, r._1, r._3, r._6)).toSet
+    assert(snap() == expected, "the snapshot must hold exactly the winner's rows")
+    // the loser's files are gone, and its retry skips as a replay
+    assert(new java.io.File(s"$t/m0000000001").list().length == 1)
+    TxLogMaterialize.applyBatch(changes(sides(lose): _*), t, 1L)
+    assert(TxLog.currentVersion(spark, t).contains(1L))
+    assert(snap() == expected)
+  }
+}
+
+/** Rendezvous for the two-writer race: each side marks its arrival, then
+  * waits for the other. Static, so Spark tasks reach it without closure
+  * capture (local mode: one JVM). */
+object MaterializeRace {
+  import java.util.concurrent.{CountDownLatch, TimeUnit}
+  @volatile private var arrived = Array.fill(2)(new CountDownLatch(1))
+  @volatile var missed = false
+  def reset(): Unit = { arrived = Array.fill(2)(new CountDownLatch(1)); missed = false }
+  def meet(side: Int): Unit = {
+    arrived(side).countDown()
+    if (!arrived(1 - side).await(30, TimeUnit.SECONDS)) missed = true
   }
 }

@@ -16,6 +16,8 @@ import org.apache.spark.sql.functions._
   * planner re-exchanges BOTH sides to shuffle.partitions for parallelism.
   * When both join sides derive from the artifact, its layout is reused at
   * any n.)
+  *
+  * Run: `sbt "Test/runMain graft.tools.CutPartExperiment"`
   */
 object CutPartExperiment {
   def main(args: Array[String]): Unit = {

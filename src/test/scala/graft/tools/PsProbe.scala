@@ -1,5 +1,10 @@
 package graft.tools
 import org.apache.spark.sql.functions._
+
+/** Counts wrong prefix sums over a plain vs a declared-layout
+  * (`cutPartitioned`) input, against a single-window ground truth — the
+  * probe behind PrefixSum's declared-layout guard:
+  * `sbt "Test/runMain graft.tools.PsProbe"` */
 object PsProbe {
   def main(args: Array[String]): Unit = {
     val s = graft.GraftSession.local(8)

@@ -39,11 +39,19 @@ import graft.sources.TxLog
   *    OCC commit picks one, the loser deletes its dir and fails loudly
   *    (a crash before the commit leaves an unreferenced attempt dir).
   *
-  * Scale: one shuffle per batch on (table_name, pk) over touched-bucket
-  * state + batch; bucket count B is the rewrite-granularity knob (more
-  * buckets → smaller rewrites per batch, more files — the same trade as
-  * Delta's file size). The per-dir pk stats recorded on every bucket dir
-  * give point-lookup reads data skipping over the bucketed state. */
+  * Scale: three Spark executions per batch whatever the bucket count —
+  * the touched-bucket collect, the merge write, and one grouped stats
+  * read-back ([[TxLog.statsAndRowsByDir]]) — with the batch evaluated
+  * once (persisted across the first two). The merge has one shuffle,
+  * hashed on the bucket over touched-bucket state + batch, so every
+  * bucket dir holds exactly one file. Bucket count B is the
+  * rewrite-granularity knob (more buckets → smaller rewrites per batch,
+  * more files — the same trade as Delta's file size) and also the merge
+  * write's parallelism (the shuffle has B partitions). Each bucket dir
+  * records its pk envelope and row count, but a hash bucket spans the
+  * whole pk range, so the envelope never prunes a point lookup: a lookup
+  * opens every live bucket dir, one file each; the counts feed
+  * [[TxLog.countRows]]. */
 object TxLogMaterialize {
 
   /** Stored state row shape (tombstones included). */
@@ -87,12 +95,6 @@ object TxLogMaterialize {
       s"$table: batch $batchId arrived but '$AppId' last delivered " +
         s"$watermark — a second writer shares this sink table, or " +
         "batches were skipped")
-    val changes = batch.select(
-      col("tableName").as("table_name"), col("pk"), col("lsn"),
-      col("op"), col("tsUs").as("ts_us"), col("value"))
-    // touched buckets: bounded by nBuckets — a documented O(B) pull
-    val touched = changes.select(bucketOf(nBuckets).as("b"))
-      .distinct().collect().map(_.getLong(0)).sorted.toSeq
     val liveNames = st.liveAdds.map(_.name)
     // a live dir under this batch's prefix means a producer without txn
     // records (or a foreign one) delivered it (mirrors commitBatch)
@@ -114,28 +116,46 @@ object TxLogMaterialize {
         "m<batch>/<attempt>/__bucket=<b> layout this merge sink's " +
         "bucket-granular carry-forward depends on — a compaction or " +
         "foreign writer repacked the table; re-bootstrap the sink instead")
-    val oldDirs = touched.flatMap(b =>
-      liveNames.filter(_.endsWith(s"/__bucket=$b")).sorted)
-    val oldState =
-      if (oldDirs.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          stateSchema)
-      else s.read.schema(stateSchema)
-        .parquet(oldDirs.map(d => s"$table/$d"): _*)
-    // per-key LSN merge over touched state ∪ batch — tombstones retained
-    val merged = oldState.unionByName(changes)
-      .groupBy("table_name", "pk")
-      .agg(max_by(struct(col("lsn"), col("op"), col("ts_us"), col("value")),
-        col("lsn")).as("cur"))
-      .select(col("table_name"), col("pk"), col("cur.lsn").as("lsn"),
-        col("cur.op").as("op"), col("cur.ts_us").as("ts_us"),
-        col("cur.value").as("value"))
-      .withColumn("__bucket", bucketOf(nBuckets))
+    // the batch is evaluated ONCE: the touched collect fills the cache
+    // and the merge reads it back (a streaming source counts its input
+    // rows per evaluation, so progress reports each row once)
+    val changes = batch.select(
+      col("tableName").as("table_name"), col("pk"), col("lsn"),
+      col("op"), col("tsUs").as("ts_us"), col("value"))
+      .withColumn("__bucket", bucketOf(nBuckets)).persist()
     // one partitioned write into a dir no other attempt shares: a second
     // writer racing this batch id must never touch the bytes the OCC
     // winner commits; the partition column is layout, not data
     val parent = prefix + java.util.UUID.randomUUID()
-    merged.write.partitionBy("__bucket").parquet(s"$table/$parent")
+    val (touched, oldDirs) = try {
+      // touched buckets: bounded by nBuckets — a documented O(B) pull
+      val touched = changes.select("__bucket")
+        .distinct().collect().map(_.getLong(0)).sorted.toSeq
+      val oldDirs = touched.flatMap(b =>
+        liveNames.filter(_.endsWith(s"/__bucket=$b")).sorted)
+      val oldState =
+        if (oldDirs.isEmpty)
+          s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            stateSchema)
+        else s.read.schema(stateSchema)
+          .parquet(oldDirs.map(d => s"$table/$d"): _*)
+      // per-key LSN merge over touched state ∪ batch — tombstones
+      // retained. ONE shuffle, hashed on the bucket alone: the bucket is
+      // a function of the key, so grouping by (bucket, key) is the
+      // per-key merge, and each bucket lands whole in one task — one file
+      // per bucket dir
+      oldState.withColumn("__bucket", bucketOf(nBuckets))
+        .unionByName(changes)
+        .repartition(nBuckets, col("__bucket"))
+        .groupBy("__bucket", "table_name", "pk")
+        .agg(max_by(struct(col("lsn"), col("op"), col("ts_us"), col("value")),
+          col("lsn")).as("cur"))
+        .select(col("table_name"), col("pk"), col("cur.lsn").as("lsn"),
+          col("cur.op").as("op"), col("cur.ts_us").as("ts_us"),
+          col("cur.value").as("value"), col("__bucket"))
+        .write.partitionBy("__bucket").parquet(s"$table/$parent")
+      (touched, oldDirs)
+    } finally changes.unpersist()
     val fs = new org.apache.hadoop.fs.Path(table)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     // NUMERIC sort: a lexicographic .sorted would order __bucket=10
@@ -147,11 +167,12 @@ object TxLogMaterialize {
     require(written.map(_.stripPrefix("__bucket=").toLong) == touched,
       s"$table: batch $batchId wrote buckets $written but touched " +
         s"$touched — merge/write drift")
+    // every written dir's (stats, rows) in ONE grouped read-back
+    val stats = TxLog.statsAndRowsByDir(s, s"$table/$parent", written,
+      stateSchema, "__bucket", Seq("pk"))
     val adds = written.map { w =>
-      val dir = s"$parent/$w"
-      val (stats, nRows) = TxLog.statsAndRows(
-        s.read.schema(stateSchema).parquet(s"$table/$dir"), Seq("pk"))
-      TxLog.AddFile(dir, stats, rows = Some(nRows))
+      val (st, nRows) = stats(w)
+      TxLog.AddFile(s"$parent/$w", st, rows = Some(nRows))
     }
     val v = st.head.fold(0L)(_ + 1L)
     val committed = TxLog.tryCommitActions(s, table, v, adds, oldDirs,

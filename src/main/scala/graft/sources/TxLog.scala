@@ -820,31 +820,57 @@ object TxLog {
     * Columns that are entirely null (or absent rows) record no stats —
     * the conservative no-skip default. */
   def statsOf(df: DataFrame, cols: Seq[String]): Map[String, (String, String)] =
-    if (cols.isEmpty) Map.empty
-    else {
-      import org.apache.spark.sql.functions.{max, min, col}
-      val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
-      val r = df.agg(aggs.head, aggs.tail: _*).head()
-      cols.zipWithIndex.flatMap { case (c, i) =>
-        if (r.isNullAt(2 * i) || r.isNullAt(2 * i + 1)) None
-        else Some(c -> (r.get(2 * i).toString, r.get(2 * i + 1).toString))
-      }.toMap
-    }
+    if (cols.isEmpty) Map.empty else statsAndRows(df, cols)._1
 
   /** [[statsOf]] plus the dir's ROW COUNT — the same single aggregate
-    * pass (footer-cheap on parquet), so recording counts costs nothing
-    * extra at write time. */
+    * pass, so recording counts costs nothing extra at write time. A
+    * partitioned write records every output dir's pair in one grouped
+    * pass instead: [[statsAndRowsByDir]]. */
   def statsAndRows(df: DataFrame,
       cols: Seq[String]): (Map[String, (String, String)], Long) = {
-    import org.apache.spark.sql.functions.{count, lit, max, min, col}
-    val aggs = count(lit(1)) +:
-      cols.flatMap(c => Seq(min(col(c)), max(col(c))))
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    val aggs = statsAggs(cols)
+    statsRow(df.agg(aggs.head, aggs.tail: _*).head(), 0, cols)
+  }
+
+  /** [[statsAndRows]] for EVERY `<partCol>=<value>` dir a partitioned
+    * write left under `parent` (`dirs`, as listed), in ONE grouped
+    * aggregate over the whole write instead of one query per dir — keyed
+    * by dir name (`__bucket=3`), each pair equal to [[statsAndRows]] over
+    * that dir read alone with `schema`. The partition column is read as
+    * a STRING (a user schema's type wins over partition inference), so
+    * the key is the dir name's value verbatim. Loud unless the pairs
+    * cover exactly `dirs`. */
+  def statsAndRowsByDir(s: SparkSession, parent: String, dirs: Seq[String],
+      schema: StructType, partCol: String, cols: Seq[String])
+      : Map[String, (Map[String, (String, String)], Long)] =
+    if (dirs.isEmpty) Map.empty
+    else {
+      val aggs = statsAggs(cols)
+      val byDir = s.read.schema(schema.add(partCol, "string")).parquet(parent)
+        .groupBy(col(partCol)).agg(aggs.head, aggs.tail: _*).collect()
+        .map(r => s"$partCol=${r.getString(0)}" -> statsRow(r, 1, cols)).toMap
+      require(byDir.keySet == dirs.toSet,
+        s"$parent: stats cover ${byDir.keySet.toSeq.sorted} but the write " +
+          s"left ${dirs.sorted} — write/read-back drift")
+      byDir
+    }
+
+  /** The row count, then (min, max) per stats column. */
+  private def statsAggs(cols: Seq[String]) = {
+    import org.apache.spark.sql.functions.{count, lit}
+    count(lit(1)) +: cols.flatMap(c => Seq(min(col(c)), max(col(c))))
+  }
+
+  /** Render a [[statsAggs]] result starting at field `at`; an all-null
+    * column records no stats. */
+  private def statsRow(r: Row, at: Int,
+      cols: Seq[String]): (Map[String, (String, String)], Long) = {
     val stats = cols.zipWithIndex.flatMap { case (c, i) =>
-      if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i)) None
-      else Some(c -> (r.get(1 + 2 * i).toString, r.get(2 + 2 * i).toString))
+      val (lo, hi) = (at + 1 + 2 * i, at + 2 + 2 * i)
+      if (r.isNullAt(lo) || r.isNullAt(hi)) None
+      else Some(c -> (r.get(lo).toString, r.get(hi).toString))
     }.toMap
-    (stats, r.getLong(0))
+    (stats, r.getLong(at))
   }
 
   /** `SELECT count(*)` from METADATA (r14): the sum of the live adds'
@@ -1596,11 +1622,11 @@ object TxLog {
     *
     * Scale shape: one bounded min/max aggregate for the curve ranges
     * (parquet-footer-cheap), a map-phase z-value, ONE range exchange +
-    * in-partition sorts (no global sort), one bounded stats aggregate
-    * per output dir. Range-slice boundaries come from Spark's sampling
-    * range partitioner — layout, never semantics: reads are identical
-    * under any boundary draw, pruning is conservative per recorded
-    * envelope. */
+    * in-partition sorts (no global sort), one stats aggregate grouped
+    * by output dir ([[statsAndRowsByDir]]). Range-slice boundaries come
+    * from Spark's sampling range partitioner — layout, never semantics:
+    * reads are identical under any boundary draw, pruning is
+    * conservative per recorded envelope. */
   def optimizeClustered(s: SparkSession, table: String,
       schema: StructType, clusterCols: Seq[String], nDirs: Int): Option[Long] = {
     require(nDirs >= 1, s"nDirs must be positive, got $nDirs")
@@ -1638,11 +1664,11 @@ object TxLog {
       .filter(_.startsWith("__slice=")).sorted.toSeq
     val priorStats = live.flatMap(_.stats.keys)
     val statsCols = (clusterCols ++ priorStats).distinct
+    val stats = statsAndRowsByDir(s, s"$table/$parent", written, schema,
+      "__slice", statsCols)
     val adds = written.map { w =>
-      val dir = s"$parent/$w"
-      val (st, nRows) = statsAndRows(
-        s.read.schema(schema).parquet(s"$table/$dir"), statsCols)
-      AddFile(dir, st, rows = Some(nRows))
+      val (st, nRows) = stats(w)
+      AddFile(s"$parent/$w", st, rows = Some(nRows))
     }
     require(tryCommitActions(s, table, newV, adds, live.map(_.name),
         cdf = Some("@none")),

@@ -365,14 +365,13 @@ object TxLogMerge {
     require(writtenBuckets.forall(expected.contains),
       s"$table: merge wrote buckets $writtenBuckets outside the expected " +
         s"${expected.toSeq.sorted} — merge/write drift")
-    // stats are computed ONCE (they don't depend on the final dir
-    // name); the AddFile list is re-derived per claimed name
-    val perBucket = written.map { w =>
-      val (st, nRows) = TxLog.statsAndRows(
-        s.read.schema(schema).parquet(s"$table/$parent/$w"), keyCols)
-      (w, st, nRows)
-    }
-    def addsFor(parentName: String) = perBucket.map { case (w, st, nRows) =>
+    // stats are computed ONCE, in one grouped read-back of the merge dir
+    // (they don't depend on the final dir name); the AddFile list is
+    // re-derived per claimed name
+    val stats = TxLog.statsAndRowsByDir(s, s"$table/$parent", written,
+      schema, "__bucket", keyCols)
+    def addsFor(parentName: String) = written.map { w =>
+      val (st, nRows) = stats(w)
       TxLog.AddFile(s"$parentName/$w", st,
         part = Map(
           "__bucket" -> w.stripPrefix("__bucket="), "__nb" -> nb.toString,

@@ -543,9 +543,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
         .select("table_name", "pk", "lsn", "op", "value")
         .as[(String, Long, Long, String, Double)].collect().toSeq
       assert(got == Seq(("users", 1L, 2L, "UPDATE", 2.0)))
-      // offsets resumed: the restarted run processed exactly the delta
-      // batch, starting where the first run ended (not numInputRows: the
-      // sink evaluates each batch twice, and the count follows)
+      // offsets resumed: the restarted run read exactly the one-row delta
+      // (the sink evaluates each batch once, so progress counts it once),
+      // in one batch starting where the first run ended
+      assert(q2.recentProgress.map(_.numInputRows).sum == 1L)
       val ran = q2.recentProgress.filter(_.numInputRows > 0)
       assert(ran.map(_.batchId).toSeq == Seq(1L))
       assert(ran.head.sources.head.startOffset == q1End)

@@ -471,6 +471,159 @@ class TxLogV2Spec extends AnyFunSuite with SparkTestBase {
     assert(TxLog.currentVersion(spark, t).contains(1L))
     assert(snap() == expected)
   }
+
+  /** Every add's recorded (stats, rows) must equal statsAndRows over its
+    * dir read alone — the per-dir query the grouped read-back replaced. */
+  private def assertStatsParity(t: String, adds: Seq[TxLog.AddFile],
+      schema: StructType, cols: Seq[String]): Unit = {
+    assert(adds.nonEmpty)
+    adds.foreach { a =>
+      val (st, n) = TxLog.statsAndRows(
+        spark.read.schema(schema).parquet(s"$t/${a.name}"), cols)
+      assert((a.stats, a.rows) == (st, Some(n)), s"stats drift on ${a.name}")
+    }
+  }
+
+  test("stats parity: TxLogMaterialize adds at 8 and 16 buckets — a " +
+      "tombstone-only bucket included — record exactly statsAndRows of " +
+      "their dir read alone") {
+    for (nb <- Seq(8, 16)) {
+      val t = freshTable()
+      TxLogMaterialize.applyBatch(changes((1L to 40L).map(k =>
+        (k, "users", "INSERT", k, 100L + k, k.toDouble)): _*), t, 0L, nb)
+      // delete every key of one bucket: its rewrite holds only tombstones
+      val victim = TxLog.liveAdds(spark, t).head.name
+      val gone = spark.read.schema(TxLogMaterialize.stateSchema)
+        .parquet(s"$t/$victim").select("pk").as[Long].collect().toSet
+      val kept = (1L to 40L).filterNot(gone).take(5)
+      TxLogMaterialize.applyBatch(changes(
+        gone.toSeq.map(k => (100L + k, "users", "DELETE", k, 500L, 0.0)) ++
+          kept.map(k => (100L + k, "users", "UPDATE", k, 500L, -1.0)): _*),
+        t, 1L, nb)
+      val bucket = victim.split('/').last
+      val tomb = TxLog.commitAt(spark, t, 1L).adds
+        .find(_.name.endsWith(s"/$bucket")).get
+      assert(spark.read.schema(TxLogMaterialize.stateSchema)
+        .parquet(s"$t/${tomb.name}").select("op").distinct()
+        .as[String].collect().toSeq == Seq("DELETE"))
+      assertStatsParity(t,
+        TxLog.commitAt(spark, t, 0L).adds ++ TxLog.commitAt(spark, t, 1L).adds,
+        TxLogMaterialize.stateSchema, Seq("pk"))
+    }
+  }
+
+  test("stats parity: a string-keyed bucketed SQL MERGE and " +
+      "optimizeClustered record exactly statsAndRows of each dir read alone") {
+    val root = java.nio.file.Files.createTempDirectory("statsparity").toString
+    spark.conf.set("spark.sql.catalog.statsparity",
+      classOf[graft.sources.TxLogCatalog].getName)
+    spark.conf.set("spark.sql.catalog.statsparity.root", root)
+    spark.sql("CREATE TABLE statsparity.t (k STRING, v BIGINT) USING txlog")
+    (0L until 30L).map(i => (s"k$i", i)).toDF("k", "v")
+      .createOrReplaceTempView("statsparity_v0")
+    spark.sql("INSERT INTO statsparity.t SELECT * FROM statsparity_v0")
+    // the first merge lays the table out in buckets, the second rewrites
+    // only the buckets its keys touch
+    for ((lo, hi) <- Seq((20L, 40L), (0L, 5L))) {
+      (lo until hi).map(i => (s"k$i", -i)).toDF("k", "v")
+        .createOrReplaceTempView("statsparity_src")
+      spark.sql(
+        """MERGE INTO statsparity.t AS t USING statsparity_src AS s
+          |ON t.k = s.k
+          |WHEN MATCHED THEN UPDATE SET v = s.v
+          |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)
+          |""".stripMargin)
+    }
+    val mt = s"$root/t"
+    val merged = TxLog.commitAt(spark, mt, TxLog.currentVersion(spark, mt).get)
+    assert(merged.adds.nonEmpty && merged.adds.size < 16 &&
+      merged.adds.forall(_.part.contains("__bucket")),
+      s"the second merge must be bucket-granular: ${merged.adds.map(_.name)}")
+    assertStatsParity(mt, TxLog.liveAdds(spark, mt),
+      StructType.fromDDL("k STRING, v BIGINT"), Seq("k"))
+
+    val ct = freshTable()
+    (0 until 2).foreach { i =>
+      (0L until 16L).flatMap(x => (0L until 16L).map(y => (x, y)))
+        .filter { case (x, y) => (x + y) % 2 == i }
+        .toDF("x", "y").coalesce(1).write.parquet(s"$ct/a$i")
+      assert(TxLog.tryCommit(spark, ct, i.toLong, Seq(s"a$i"), Nil))
+    }
+    assert(TxLog.optimizeClustered(spark, ct, xySchema, Seq("x", "y"), 4)
+      .contains(2L))
+    assertStatsParity(ct, TxLog.liveAdds(spark, ct), xySchema, Seq("x", "y"))
+  }
+
+  test("statsAndRowsByDir: an all-null column records no stats, and pairs " +
+      "that do not cover the listed dirs are loud") {
+    val t = freshTable()
+    Seq((0L, Some(1L)), (0L, Some(5L)), (1L, None), (1L, None))
+      .toDF("p", "x").write.partitionBy("p").parquet(s"$t/w")
+    val schema = StructType.fromDDL("x BIGINT")
+    val got = TxLog.statsAndRowsByDir(spark, s"$t/w", Seq("p=0", "p=1"),
+      schema, "p", Seq("x"))
+    assert(got == Map("p=0" -> (Map("x" -> ("1", "5")), 2L),
+      "p=1" -> (Map.empty, 2L)))
+    Seq("p=0", "p=1").foreach(d => assert(got(d) ==
+      TxLog.statsAndRows(spark.read.schema(schema).parquet(s"$t/w/$d"), Seq("x"))))
+    val e = intercept[IllegalArgumentException](TxLog.statsAndRowsByDir(
+      spark, s"$t/w", Seq("p=0"), schema, "p", Seq("x")))
+    assert(e.getMessage.contains("write/read-back drift"))
+  }
+
+  test("TxLogMaterialize fixed cost: one batch runs the same number of " +
+      "Spark executions (at most 3) at 8 and 16 buckets, and writes one " +
+      "data file per bucket dir") {
+    val runs = Seq(8, 16).map { nb =>
+      val t = freshTable()
+      TxLogMaterialize.applyBatch(changes((1L to 200L).map(k =>
+        (k, "users", "INSERT", k, 100L + k, k.toDouble)): _*), t, 0L, nb)
+      // AQE would coalesce this small shuffle into one task, which hides
+      // a merge whose shuffle splits a bucket across tasks
+      val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+      val prev = spark.conf.getOption(coalesce)
+      spark.conf.set(coalesce, "false")
+      val n = try executionsOf(TxLogMaterialize.applyBatch(changes((1L to 200L)
+        .map(k => (1000L + k, "users", "UPDATE", k, 900L, -k.toDouble)): _*),
+        t, 1L, nb))
+      finally prev.fold(spark.conf.unset(coalesce))(spark.conf.set(coalesce, _))
+      val adds = TxLog.commitAt(spark, t, 1L).adds
+      assert(adds.size == nb, s"the batch must touch all $nb buckets")
+      adds.foreach { a =>
+        val files = new java.io.File(s"$t/${a.name}").list()
+          .filter(_.endsWith(".parquet"))
+        assert(files.length == 1, s"${a.name} holds ${files.toSeq}")
+      }
+      n
+    }
+    assert(runs.head == runs.last && runs.head <= 3,
+      s"executions per batch at 8 and 16 buckets: $runs")
+  }
+
+  /** The Spark SQL executions `f` runs, counted by a query-execution
+    * listener. The listener bus delivers in order, so once a marker query
+    * run after `f` is seen, every execution of `f` has been. */
+  private def executionsOf(f: => Unit): Int = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val marker = "executions-of-marker"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.logical.toString)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(qe.logical.toString)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      spark.range(1).select(lit(marker)).collect()
+      Iterator.continually(
+        seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(p => { assert(p != null, "the marker query was never seen"); p })
+        .takeWhile(!_.contains(marker)).size
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
 
 /** Rendezvous for the two-writer race: each side marks its arrival, then

@@ -16,6 +16,14 @@ import org.apache.spark.sql.DataFrame
   * only when `spark.cleaner.referenceTracking.cleanCheckpoints=true`
   * (GraftSession sets it; deployments building their own session must too),
   * otherwise every cut leaks a checkpoint dir for the life of the app.
+  *
+  * The rule for operators: an intermediate that two consumers read is
+  * CUT, never persisted. A cache can be evicted or cleared between the
+  * call and the action, and then each consumer replans its own copy —
+  * anything nondeterministic in it (a range-partition id, sampled with an
+  * rdd.id-derived seed) differs between the copies. A cut stores the rows
+  * once, so every consumer scans the same data (PrefixSum's slice ids are
+  * the case `Round16OpsSpec` pins).
   */
 object Checkpointing {
 

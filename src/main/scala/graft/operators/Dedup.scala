@@ -281,43 +281,47 @@ object Dedup {
     // executor-local blocks on local mode and reliable checkpoint(dir) when
     // the session configured one — set sc.setCheckpointDir on clusters so
     // executor churn can't kill the loop mid-iteration.
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("canonical", col("doc_id")).transform(Checkpointing.cut)
-    var i = 0
+    // edges is read by every iteration; release it however the loop ends
+    // (the result is a cut generation, so it never reads edges again)
     var changed = 1L
-    while (changed > 0 && i < maxIter) {
-      val nbrMin = edges.join(labels, edges("dst") === labels("doc_id"))
-        .groupBy(col("src")).agg(min("canonical").as("nbr_min"))
-      val stepped0 = labels.join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
-        .select(col("doc_id"),
-          least(col("canonical"), coalesce(col("nbr_min"), col("canonical"))).as("canonical"),
-          col("canonical").as("__old"))
-      // pointer jumping (canonical -> canonical-of-canonical) doubles
-      // propagation distance per round, turning deep-chain convergence into
-      // O(log diameter) — but it costs an extra join, so only engage it
-      // after plain propagation has had the two rounds that settle the
-      // common star/pair-shaped dup clusters. The jump self-joins stepped,
-      // so checkpoint it first or the propagate join runs twice.
-      // the change flag rides along with the propagation, so convergence
-      // detection is a cheap aggregate over the checkpointed generation
-      // instead of an extra labels↔next join per round
-      val nextFlagged = (if (i < 2) stepped0
-        else {
-          val stepped = Checkpointing.cut(stepped0)
-          stepped.as("l")
-            .join(stepped.as("m").select(col("doc_id").as("m_id"), col("canonical").as("m_can")),
-              col("l.canonical") === col("m_id"), "left")
-            .select(col("l.doc_id").as("doc_id"),
-              least(col("l.canonical"), coalesce(col("m_can"), col("l.canonical"))).as("canonical"),
-              col("l.__old").as("__old"))
-        })
-        .withColumn("__chg", when(col("canonical") =!= col("__old"), 1L).otherwise(0L))
-        .transform(Checkpointing.cut)
-      changed = nextFlagged.agg(coalesce(sum("__chg"), lit(0L))).head().getLong(0)
-      labels = nextFlagged.drop("__old", "__chg")
-      i += 1
-    }
-    edges.unpersist()
+    val labels = try {
+      var labels = edges.select(col("src").as("doc_id")).distinct()
+        .withColumn("canonical", col("doc_id")).transform(Checkpointing.cut)
+      var i = 0
+      while (changed > 0 && i < maxIter) {
+        val nbrMin = edges.join(labels, edges("dst") === labels("doc_id"))
+          .groupBy(col("src")).agg(min("canonical").as("nbr_min"))
+        val stepped0 = labels.join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
+          .select(col("doc_id"),
+            least(col("canonical"), coalesce(col("nbr_min"), col("canonical"))).as("canonical"),
+            col("canonical").as("__old"))
+        // pointer jumping (canonical -> canonical-of-canonical) doubles
+        // propagation distance per round, turning deep-chain convergence into
+        // O(log diameter) — but it costs an extra join, so only engage it
+        // after plain propagation has had the two rounds that settle the
+        // common star/pair-shaped dup clusters. The jump self-joins stepped,
+        // so checkpoint it first or the propagate join runs twice.
+        // the change flag rides along with the propagation, so convergence
+        // detection is a cheap aggregate over the checkpointed generation
+        // instead of an extra labels↔next join per round
+        val nextFlagged = (if (i < 2) stepped0
+          else {
+            val stepped = Checkpointing.cut(stepped0)
+            stepped.as("l")
+              .join(stepped.as("m").select(col("doc_id").as("m_id"), col("canonical").as("m_can")),
+                col("l.canonical") === col("m_id"), "left")
+              .select(col("l.doc_id").as("doc_id"),
+                least(col("l.canonical"), coalesce(col("m_can"), col("l.canonical"))).as("canonical"),
+                col("l.__old").as("__old"))
+          })
+          .withColumn("__chg", when(col("canonical") =!= col("__old"), 1L).otherwise(0L))
+          .transform(Checkpointing.cut)
+        changed = nextFlagged.agg(coalesce(sum("__chg"), lit(0L))).head().getLong(0)
+        labels = nextFlagged.drop("__old", "__chg")
+        i += 1
+      }
+      labels
+    } finally edges.unpersist()
     if (changed > 0)
       org.slf4j.LoggerFactory.getLogger(getClass)
         .warn(s"canonicalClusters did not converge in $maxIter iterations; " +

@@ -50,7 +50,7 @@ object Embeddings {
       .head().getSeq[Double](0)
     val centered = e.select(col(idCol).as("vec_id"),
         graft.plans.VecSub.sub(s, col(vecCol), typedLit(mu)).as("c"))
-      .transform(CacheLease.lease)
+      .transform(Checkpointing.cut) // read by init, every iteration, the caller
     var v = normalize(centered.orderBy("vec_id").limit(1)
       .head().getSeq[Double](1))
     var i = 0

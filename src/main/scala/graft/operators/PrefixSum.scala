@@ -27,9 +27,10 @@ import org.apache.spark.sql.functions._
   * Cost shape: two row exchanges (the range partitioning that establishes
   * global order, and the bounded local window's hash exchange) — both
   * spread over all tasks — plus the O(partitions × groups) partials
-  * exchange. The anti-pattern this replaces has one row exchange but a
-  * single-task sort per group; at 100 TB the extra parallel exchange is
-  * noise next to a terabyte single-reducer sort.
+  * exchange; the ranged table is stored once by a lineage cut and read by
+  * both of its consumers. The anti-pattern this replaces has one row
+  * exchange but a single-task sort per group; at 100 TB the extra parallel
+  * exchange is noise next to a terabyte single-reducer sort.
   *
   * Output rows are exactly the input rows plus `outCol`; values are
   * identical to the single-window form (the decomposition is exact integer
@@ -38,41 +39,20 @@ import org.apache.spark.sql.functions._
   */
 object PrefixSum {
 
-  /** Make the `__pid` column safe to consume from BOTH sides of the offset
-    * join-back (r16 — the finding of tools.PsProbe, test scope). The
-    * offsets derive from the ranged table and join back onto it, so the
-    * analyzer's self-join
-    * attribute dedup re-instantiates one side's leaves with fresh exprIds.
-    * For every ordinary input the re-instantiated subtree still
-    * `sameResult`s the leased cache entry, both sides read ONE cached RDD,
-    * and the nondeterministic pid mapping is shared — the fast path.
-    *
-    * The exception: a [[Checkpointing.cutPartitioned]] artifact anywhere
-    * in the input subtree. Its LogicalRDD carries declared
-    * outputPartitioning/outputOrdering whose expressions canonicalization
-    * does NOT normalize, so the dedup'd copy no longer matches the cache —
-    * the offsets side silently recomputes its own range exchange, and
-    * RangePartitioner's rdd.id-seeded boundary sampling gives the two
-    * executions DIFFERENT pid mappings: silently wrong prefix sums
-    * (measured: 2284/2991 rows wrong in the test-scope tools.PsProbe,
-    * `sbt "Test/runMain graft.tools.PsProbe"`). For that input
-    * class the ranged table is eagerly cut instead: `__pid` becomes
-    * materialized DATA in a plain LogicalRDD (which dedups safely — the
-    * re-instantiated leaf scans the same RDD), at the cost of one extra
-    * read pass over the ranged table. The check is one walk of the
-    * analyzed plan at build time; every current caller takes the fast
-    * path. */
-  private def pinnedPids(ranged: DataFrame): DataFrame = {
-    val declaredLayoutLeaf = ranged.queryExecution.analyzed.collectLeaves().exists {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.outputOrdering.nonEmpty ||
-          !l.outputPartitioning.isInstanceOf[
-            org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning]
-      case _ => false
-    }
-    if (declaredLayoutLeaf) Checkpointing.cut(ranged)
-    else CacheLease.lease(ranged)
-  }
+  /** Range-partition `df` on `sortCols` and CUT the result with its
+    * `__pid = spark_partition_id()` column. Both sides of the offset
+    * join-back read this table, and the analyzer's self-join dedup
+    * re-instantiates one side's leaf; a cut leaf is one LogicalRDD, so
+    * both copies scan the same stored rows and `__pid` is DATA. Left
+    * lazy, each side could plan its own range exchange (cache evicted or
+    * cleared, exchange reuse off, a declared-layout input that fails
+    * cache matching), and RangePartitioner samples boundaries with an
+    * rdd.id-derived seed: two executions, two pid mappings, silently
+    * wrong sums (pinned in `Round16OpsSpec`). */
+  private def rangedSlices(df: DataFrame, sortCols: Seq[Column]): DataFrame =
+    Checkpointing.cut(df.repartitionByRange(
+        df.sparkSession.sessionState.conf.numShufflePartitions, sortCols: _*)
+      .withColumn("__pid", spark_partition_id()))
 
   /** Per-group running sum of `valueCol` in (grpCol, orderCols) order.
     * `orderCols` may carry sort directions (e.g. `col("q").desc`) and must
@@ -100,22 +80,9 @@ object PrefixSum {
         "alias the column once and reuse the output instead")
     require(valueOuts.map(_._2).distinct.size == valueOuts.size,
       s"cumSums: duplicate output column names in ${valueOuts.map(_._2)}")
-    val spark = df.sparkSession
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    // LAZY persist (via CacheLease, which bounds how many such internal
-    // caches outlive their query), not an eager checkpoint: the ranged
-    // table feeds the partials agg AND the final join, so the first
-    // consumer computes and caches in one pass and the second reads the
-    // cache — an eager cut would add a third full pass. Consistency of
-    // spark_partition_id across the two consumers holds because BOTH
-    // sides of the offset join-back substitute to ONE cache entry at
-    // planning, so exactly one range exchange ever executes (an evicted
-    // lease recomputes through the SAME physical plan and RDD, so even
-    // that path keeps one pid mapping). See [[pinnedPids]] for the one
-    // input class where the substitution itself fails.
-    val ranged = pinnedPids(df
-      .repartitionByRange(nParts, (col(grpCol) +: orderCols): _*)
-      .withColumn("__pid", spark_partition_id()))
+    // the ranged table feeds the partials agg AND the final join; the cut
+    // computes it once and pins each row's slice id (see [[rangedSlices]])
+    val ranged = rangedSlices(df, col(grpCol) +: orderCols)
 
     def psum(v: String) = s"__psum_$v"
     def off(v: String) = s"__off_$v"
@@ -158,11 +125,7 @@ object PrefixSum {
     * the window form. */
   def orderedDeltas(df: DataFrame, grpCol: String, orderCol: String,
       outCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val ranged = pinnedPids(df
-      .repartitionByRange(nParts, col(grpCol), col(orderCol))
-      .withColumn("__pid", spark_partition_id()))
+    val ranged = rangedSlices(df, Seq(col(grpCol), col(orderCol)))
     val local = Window.partitionBy(col(grpCol), col("__pid")).orderBy(col(orderCol))
     val prevSliceMax = ranged.groupBy(col(grpCol), col("__pid"))
       .agg(max(col(orderCol)).as("__pmax"))

@@ -43,10 +43,10 @@ object ThresholdSelect {
       s"bucketHexChars must be in 1..7, got $bucketHexChars")
     val spark = df.sparkSession
     val nBuckets = 1 << (4 * bucketHexChars)
-    // lazy persist: the bucketed table feeds the histogram AND both keep
-    // branches; the histogram collect (an action) populates the cache in
-    // the same pass, the branches read it — no eager materialization pass
-    val withB = CacheLease.lease(df.withColumn("__b",
+    // cut: the bucketed table feeds the histogram AND both keep branches,
+    // so it is computed once and stored; the histogram the thresholds come
+    // from and the rows they filter are the same stored rows
+    val withB = Checkpointing.cut(df.withColumn("__b",
       conv(substring(col(hexCol), 1, bucketHexChars), 16, 10).cast("int")))
 
     // per-(group, bucket) histogram: bounded by groups × nBuckets, collected

@@ -130,7 +130,8 @@ object DedupQueries {
     * lineage cut. */
   private[graft] def keepListPlan(s: SparkSession, dir: String): DataFrame = {
     val clusters = graft.operators.Dedup.canonicalClusters(minhashPairs(s, dir))
-    val scored = graft.operators.CacheLease.lease(clusters
+    // cut: the argmax aggregate and the join-back both read the scored rows
+    val scored = graft.operators.Checkpointing.cut(clusters
       .join(docsSharded(s, dir).select("doc_id", "text"), "doc_id")
       .withColumn("quality_score",
         graft.functions.Text.qualityScore(col("text")))

@@ -107,7 +107,8 @@ object MultimodalQueries {
     // oracle replays it from the synthesis geometry formulas.
     "mm_keep_list" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val scored = graft.operators.CacheLease.lease(imageClusters(s, dir)
+      // cut: the argmax aggregate and the join-back both read the scored rows
+      val scored = graft.operators.Checkpointing.cut(imageClusters(s, dir)
         .join(features(s, dir).filter(col("modality") === "image")
           .select(col("doc_id"),
             (col("width") * col("height")).cast("long").as("pixels")), "doc_id"))
@@ -148,7 +149,8 @@ object MultimodalQueries {
         .select(col("doc_id"),
           ((col("n_bytes") - 44) *
             expr("96000 div (sample_rate * channels)")).as("duration_ticks"))
-      val scored = graft.operators.CacheLease.lease(
+      // cut: the argmax aggregate and the join-back both read the scored rows
+      val scored = graft.operators.Checkpointing.cut(
         audioClusters(s, dir).join(dur, "doc_id"))
       val kept = scored.groupBy("canonical")
         .agg(expr("max_by(doc_id, struct(duration_ticks, -doc_id))").as("kept_doc"))
@@ -180,7 +182,8 @@ object MultimodalQueries {
       import org.apache.spark.sql.functions._
       val nFrames = videoFrames(s, dir)
         .groupBy("doc_id").agg(count(lit(1)).as("n_frames"))
-      val scored = graft.operators.CacheLease.lease(
+      // cut: the argmax aggregate and the join-back both read the scored rows
+      val scored = graft.operators.Checkpointing.cut(
         videoClusters(s, dir).join(nFrames, "doc_id"))
       val kept = scored.groupBy("canonical")
         .agg(expr("max_by(doc_id, struct(n_frames, -doc_id))").as("kept_doc"))

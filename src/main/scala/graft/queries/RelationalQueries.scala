@@ -2302,12 +2302,9 @@ object RelationalQueries {
       // second time): the joint (flag, x, y) multiplicity table is built
       // once and lineage-cut; both marginals and the pair table derive
       // from it, so everything downstream aggregates the cut artifact.
-      // NOT cutPartitioned (r16 PsProbe finding, test scope): a declared-layout
-      // LogicalRDD fails sameResult after the self-join attribute dedup
-      // inside PrefixSum's offset join-back, so the CacheLease substitution
-      // misses on one side, both sides run their OWN rdd.id-seeded range
-      // sampling, and spark_partition_id mappings disagree — silently
-      // wrong cumsums (2284/2991 rows in the probe; rho off by 1e-4 here)
+      // A plain cut, not cutPartitioned: every consumer regroups or joins
+      // on a SUBSET of (flag, x, y), which a (flag, x, y) hash layout does
+      // not satisfy, so a declared layout would buy no exchange.
       val joint = graft.operators.Checkpointing.cut(
         base.groupBy("flag", "x", "y").agg(count(lit(1)).as("m")))
       def halfRanks(c: String) = {
@@ -2322,9 +2319,9 @@ object RelationalQueries {
       // distinct values) at any corpus size — so its cumsum is a plain
       // window over the aggregated table (the lint's over-aggregate
       // shape; r15, guide §1.2): the two-level PrefixSum machinery
-      // (range exchange + partials + lease, ~4 jobs) bought nothing on a
-      // 150-row table. y (price) is near-unique/corpus-sized and keeps
-      // the two-level form.
+      // (range exchange + ranged-table cut + partials, ~4 jobs) bought
+      // nothing on a 150-row table. y (price) is near-unique/corpus-sized
+      // and keeps the two-level form.
       val rxT = {
         val cnts = joint.groupBy("flag", "x").agg(sum("m").as("cnt"))
         val w = Window.partitionBy("flag").orderBy("x")
@@ -2832,8 +2829,8 @@ object RelationalQueries {
       // explode instead of the former (st, v)-keyed shuffle join of two
       // tables derived from a lineage-cut multiplicity table (r15, guide
       // §2.4: the join's two exchanges and the cut job are gone; the
-      // aggregate feeds PrefixSum once, whose internal lease already
-      // covers its two internal readers)
+      // aggregate feeds PrefixSum once, whose cut ranged table already
+      // serves its two internal readers)
       val m = base.groupBy("st", "v", "g").agg(count(lit(1)).as("c"))
       val mv = m.groupBy("st", "v").agg(sum("c").as("cnt"),
         collect_list(struct(col("g"), col("c"))).as("gs"))
@@ -2860,8 +2857,8 @@ object RelationalQueries {
           .otherwise(sq4Div(dec(col("rs2")), dec(col("ng")))))
       // tie term off the PrefixSum OUTPUT, not `mv` — a second direct
       // consumption of mv would replay the corpus aggregate, while the
-      // cumsum output's second reader hits PrefixSum's internal cache
-      // lease of the range-partitioned table
+      // cumsum output's second reader scans PrefixSum's cut
+      // range-partitioned table
       val tieT = cum.groupBy("st").agg(
         sum(dec(col("cnt")) * dec(col("cnt")) * dec(col("cnt"))
           - dec(col("cnt"))).as("tt"))

@@ -545,7 +545,8 @@ object VectorQueries {
       val mem = embClusters(s, dir).join(emb(s, dir), "vec_id")
       val cents = graft.operators.Embeddings.labelCentroids(
         mem, "canonical", "embedding")
-      val scored = graft.operators.CacheLease.lease(
+      // cut: the argmin aggregate and the join-back both read the scores
+      val scored = graft.operators.Checkpointing.cut(
         mem.join(broadcast(cents), mem("canonical") === cents("label"))
           .select(col("vec_id"), col("canonical"),
             round(graft.plans.CosineSim.cosine(s, col("embedding"),

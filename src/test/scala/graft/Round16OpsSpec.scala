@@ -150,4 +150,47 @@ class Round16OpsSpec extends AnyFunSuite with SparkTestBase {
       .filter(col("a.cum") =!= col("t.cum")).count()
     assert(diffs == 0, s"$diffs rows diverge from the single-window truth")
   }
+
+  test("PrefixSum cumSum and orderedDeltas stay exact when the session's " +
+      "caches are cleared between the call and the action, with exchange " +
+      "reuse off (the slice ids must be stored data, not a re-derivable " +
+      "range-partition id)") {
+    // each side of the offset join-back reads the ranged table; if they
+    // recomputed it, each would plan its own range exchange and sample
+    // boundaries with an rdd.id-derived seed, so the two sides would
+    // disagree on which slice a row belongs to
+    val reuse = "spark.sql.exchange.reuse"
+    val prev = spark.conf.get(reuse)
+    spark.conf.set(reuse, "false")
+    try {
+      val cnts = spark.range(20000).select(
+          (col("id") % 3).cast("string").as("flag"),
+          (col("id") % 997).as("y"),
+          (col("id") % 7 + 1).as("m"))
+        .groupBy("flag", "y").agg(sum("m").as("cnt"))
+      val byY = org.apache.spark.sql.expressions.Window
+        .partitionBy("flag").orderBy("y")
+
+      val cum = graft.operators.PrefixSum
+        .cumSum(cnts, "flag", Seq(col("y")), "cnt", "cum")
+      spark.catalog.clearCache()
+      val cumTruth = cnts.withColumn("cum", sum("cnt").over(byY.rowsBetween(
+        org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.currentRow)))
+      val cumWrong = cum.as("a").join(cumTruth.as("t"), Seq("flag", "y"))
+        .filter(col("a.cum") =!= col("t.cum")).count()
+      assert(cum.count() == cumTruth.count())
+      assert(cumWrong == 0,
+        s"cumSum: $cumWrong rows diverge from the single-window truth")
+
+      val deltas = graft.operators.PrefixSum.orderedDeltas(cnts, "flag", "y", "d")
+      spark.catalog.clearCache()
+      val lagTruth = cnts.withColumn("d", col("y") - lag("y", 1).over(byY))
+      val deltaWrong = deltas.as("a").join(lagTruth.as("t"), Seq("flag", "y"))
+        .filter(not(col("a.d") <=> col("t.d"))).count()
+      assert(deltas.count() == lagTruth.count())
+      assert(deltaWrong == 0,
+        s"orderedDeltas: $deltaWrong rows diverge from the lag-window truth")
+    } finally spark.conf.set(reuse, prev)
+  }
 }

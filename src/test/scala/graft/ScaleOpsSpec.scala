@@ -50,6 +50,24 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(got == Seq(0L))
   }
 
+  test("canonicalClusters releases its edge cache when the component " +
+      "loop throws") {
+    // doc_b fails to evaluate on one row: the first read of the persisted
+    // edge table throws, and the cache must not outlive the failed call
+    val bad = spark.range(5).select(col("id").as("doc_a"),
+      when(col("id") === 3, raise_error(lit("boom")).cast("long"))
+        .otherwise(col("id") + 1).as("doc_b"))
+    val e = intercept[Exception](graft.operators.Dedup.canonicalClusters(bad))
+    assert(e.getMessage.contains("boom"), e.getMessage)
+    // the edge table as canonicalClusters builds it: still cached means
+    // the failed call leaked it for the life of the session
+    val edges = bad.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(bad.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .distinct()
+    assert(edges.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      s"edge cache left behind at ${edges.storageLevel}")
+  }
+
   test("approx percentiles stay within 10% of exact at sf0.001") {
     // approx_percentile(accuracy=1000) bounds RANK error (≤ N/1000), not
     // value error — a sparse tail can put adjacent order statistics a few

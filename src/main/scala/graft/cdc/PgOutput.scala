@@ -3,7 +3,7 @@ package graft.cdc
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Typed pgoutput logical-replication messages — the wire format the
@@ -547,102 +547,138 @@ object PgOutput {
   private val StreamableTypes: Set[Byte] =
     Set('R', 'I', 'U', 'D', 'T', 'M').map(_.toByte)
 
-  /** Unified streamed-xid visibility across the v2 and two-phase contexts:
-    * a streamed xid resolves through its Stream Commit/Abort, OR — when it
-    * ended with Stream Prepare — through its gid's Commit/Rollback
-    * Prepared. `excludeOpen` makes every unresolved path invisible (the
-    * prefix-decode policy) instead of loud. */
-  private def streamVisible(sc: StreamContext, pc: PreparedContext,
-      excludeOpen: Boolean, xid: Int): Boolean =
-    if (sc.committed(xid)) true
-    else if (sc.aborted(xid)) false
-    else pc.streamXidFate.get(xid) match {
-      case Some((_, Some(f))) => f
-      case Some((gid, None)) =>
-        if (excludeOpen) false
-        else throw new IllegalStateException(
-          s"stream-prepared transaction $xid ('$gid') is still in doubt — " +
-            "no Commit/Rollback Prepared in the lake")
-      case None =>
-        if (excludeOpen) false
-        else throw new IllegalStateException(
-          s"streamed transaction $xid has no Stream Commit/Abort/Prepare in the lake")
-    }
+  /** Frame types that carry no row events: Begin/Commit, and the benign
+    * metadata a real publication emits — Type 'Y' (precedes a Relation
+    * for non-builtin column types), Origin 'O', logical Message 'M'. The
+    * reference's handler switch ignores them. ONE definition shared by the
+    * batch data pass and the streaming `PgOutputStream.route`. */
+  val NoEventTypes: Set[Char] = Set('B', 'C', 'Y', 'O', 'M')
 
-  /** Every v2/2PC CONTROL frame type; one columnar filter collects them
-    * all (they are jointly O(#txns)), split driver-side into the stream
-    * and two-phase builders. */
-  private val StreamControlChars = Set('S', 'E', 'c', 'A')
-  private val PreparedControlChars = Set('b', 'P', 'K', 'r', 'p')
-  private val ControlChars: Seq[Char] =
-    (StreamControlChars ++ PreparedControlChars).toSeq
-  private val ControlTypeBytes: Set[Byte] = ControlChars.map(_.toByte).toSet
+  /** The v2/2PC CONTROL frame types, split driver-side into the stream and
+    * two-phase context builders. */
+  private val StreamControlTypes = Set('S', 'E', 'c', 'A')
+  private val PreparedControlTypes = Set('b', 'P', 'K', 'r', 'p')
+  private val ControlTypes = StreamControlTypes ++ PreparedControlTypes
 
-  /** Driver-context ceiling for [[buildContexts]]' control-frame pull
-    * (conf `graft.cdc.maxControlFrames`). The collect is O(#segments +
-    * #blocks) — a handful of frames per large transaction, thousands per
-    * realistic feed — but the bound was previously ASSUMED, not enforced:
-    * a pathological feed of millions of tiny streamed transactions would
-    * grow the driver context silently. Now it fails loudly at the default
-    * 4Mi frames (~hundreds of MB of control payloads) with the knob named
-    * in the error — the scale posture every other driver pull in this
-    * file already has. */
-  private val MaxControlFramesDefault = 4L << 20
+  /** The small frames every batch decode pulls to the driver: Relation
+    * frames, O(#tables × #schema-versions), and control frames,
+    * O(#segments + #blocks). */
+  private val SmallTypes: Set[Char] = ControlTypes + 'R'
 
-  /** The ceiling-guarded control-frame pull shared by every interval-
-    * context builder: one columnar filter, one cheap count enforcing the
-    * bound BEFORE the collect, then the bounded decode. */
-  private def boundedControlPull(
-      typed: org.apache.spark.sql.Dataset[(Long, Array[Byte])],
-      chars: Seq[Char]): Array[(Long, Char, PgMessage)] = {
-    val filtered = typed
-      .filter(substring(col("data"), 1, 1)
-        .isin(chars.map(c => lit(Array(c.toByte))): _*))
-    val maxFrames = typed.sparkSession.conf
-      .getOption("graft.cdc.maxControlFrames").map(_.toLong)
+  /** Default of `graft.cdc.maxControlFrames`, the ceiling on one small-
+    * frame pull: 4Mi frames (~hundreds of MB of payloads) — a handful of
+    * frames per large transaction, thousands per realistic feed. A
+    * pathological feed of millions of tiny streamed transactions fails
+    * loudly with the knob named in the error instead of growing the
+    * driver context silently. */
+  private val MaxControlFramesDefault = 4 << 20
+
+  private def typedFrames(frames: DataFrame): Dataset[(Long, Array[Byte])] = {
+    import frames.sparkSession.implicits._
+    frames.select(col("lsn").cast("long"), col("data")).as[(Long, Array[Byte])]
+  }
+
+  /** First-byte frame dispatch, COLUMNAR: a substring on the binary
+    * column that runs before typed deserialization, so no pass
+    * deserializes frames it won't keep. */
+  private def firstByteIs(types: Set[Char]): Column =
+    substring(col("data"), 1, 1).isin(types.toSeq.map(c => lit(Array(c.toByte))): _*)
+
+  /** The ONE driver pull of a batch decode: every frame whose type is in
+    * `types`, in one scan. The ceiling is applied IN THE PLAN
+    * (`limit(ceiling + 1)`, the BoundedPull pattern), so a lake whose small
+    * frames outgrow it — or a live lake that grows while it is read —
+    * moves at most ceiling + 1 frames to the driver, then fails loudly. */
+  private def smallFrames(typed: Dataset[(Long, Array[Byte])],
+      types: Set[Char]): Array[(Long, Array[Byte])] = {
+    val max = typed.sparkSession.conf
+      .getOption("graft.cdc.maxControlFrames").map(_.toInt)
       .getOrElse(MaxControlFramesDefault)
-    val n = filtered.count()
-    require(n <= maxFrames,
-      s"$n control frames exceed the driver-context ceiling " +
-        s"$maxFrames (graft.cdc.maxControlFrames) — the interval contexts " +
-        "are built driver-side and this feed's transaction count breaks " +
-        "the O(#txns)-is-small assumption; raise the ceiling only with " +
-        "driver memory to match, or chunk the feed by LSN range")
-    filtered.collect().map { case (lsn, b) => (lsn, b(0).toChar, decode(b)) }
+    val pulled = typed.filter(firstByteIs(types)).limit(max + 1).collect()
+    require(pulled.length <= max,
+      s"more than $max relation/control frames, past the driver-context " +
+        "ceiling (graft.cdc.maxControlFrames) — the registry and " +
+        "interval contexts are built driver-side and this feed's " +
+        "transaction count breaks the O(#txns)-is-small assumption; raise " +
+        "the ceiling only with driver memory to match, or chunk the feed " +
+        "by LSN range")
+    pulled
   }
 
-  /** One bounded pass: collect + decode every control frame and build both
-    * contexts. The bound is ENFORCED (one cheap count over the columnar
-    * filter before the pull), not assumed. */
-  private def buildContexts(typed: org.apache.spark.sql.Dataset[(Long, Array[Byte])])
-      : (StreamContext, PreparedContext) = {
-    val controls = boundedControlPull(typed, ControlChars)
-    val ctx = StreamContext.build(
-      controls.collect { case (l, t, m) if StreamControlChars(t) => (l, m) }.toSeq)
-    val pctx = PreparedContext.build(
-      controls.collect { case (l, t, m) if PreparedControlChars(t) => (l, m) }.toSeq)
-    // cross-context contradiction: one xid cannot both resolve at stream
-    // level and end prepared
-    val contradictory = (ctx.committed ++ ctx.aborted) intersect pctx.streamXidFate.keySet
-    require(contradictory.isEmpty,
-      s"xids with BOTH a stream-level fate and a Stream Prepare: $contradictory")
-    (ctx, pctx)
+  /** What a batch decode knows about a lake's transactions, built from the
+    * control frames of one small-frame pull and broadcast to the data
+    * pass: stream segments and fates, prepared blocks and fates, and the
+    * policy for unresolved ones (`excludeOpen`). */
+  private final class FrameScope(sc: StreamContext, pc: PreparedContext,
+      excludeOpen: Boolean) extends Serializable {
+
+    /** Streamed-xid visibility across both contexts: a streamed xid
+      * resolves through its Stream Commit/Abort, OR — when it ended with
+      * Stream Prepare — through its gid's Commit/Rollback Prepared.
+      * `excludeOpen` makes every unresolved path invisible (the prefix-
+      * decode policy) instead of loud. */
+    private def streamVisible(xid: Int): Boolean =
+      if (sc.committed(xid)) true
+      else if (sc.aborted(xid)) false
+      else pc.streamXidFate.get(xid) match {
+        case Some((_, Some(f))) => f
+        case Some((gid, None)) =>
+          if (excludeOpen) false
+          else throw new IllegalStateException(
+            s"stream-prepared transaction $xid ('$gid') is still in doubt — " +
+              "no Commit/Rollback Prepared in the lake")
+        case None =>
+          if (excludeOpen) false
+          else throw new IllegalStateException(
+            s"streamed transaction $xid has no Stream Commit/Abort/Prepare in the lake")
+      }
+
+    /** The ONE per-frame dispatch of every batch pass (relations, data,
+      * messages): the frame's message when its transaction is visible,
+      * None when it is not — decided BEFORE the payload decodes. A frame
+      * inside a stream segment is xid-prefixed and must carry that
+      * segment's xid; a frame inside a prepared block is plain v1 and
+      * follows the block's fate; any other frame is plain v1. A frame
+      * inside both a segment and a block is malformed no matter its type:
+      * blocks and segments are serialized on the wire. */
+    def visible(lsn: Long, b: Array[Byte]): Option[PgMessage] =
+      (sc.segmentAt(lsn), pc.blockAt(lsn)) match {
+        case (Some(seg), Some(blk)) =>
+          throw new IllegalStateException(
+            s"frame at lsn $lsn sits inside BOTH stream segment (xid ${seg.xid}) " +
+              s"and prepared block ('${blk.gid}') — blocks are serialized on " +
+              "the wire; the lake is malformed")
+        case (Some(seg), None) =>
+          if (!streamVisible(seg.xid)) None
+          else decodeStreamed(b) match {
+            case StreamedMsg(xid, inner) =>
+              require(xid == seg.xid,
+                s"frame at lsn $lsn carries xid $xid inside segment of ${seg.xid}")
+              Some(inner)
+            case other => Some(other)
+          }
+        case (None, Some(blk)) =>
+          if (pc.blockVisible(blk, excludeOpen)) Some(decode(b)) else None
+        case (None, None) => Some(decode(b))
+      }
   }
 
-  /** Frame-scope resolution shared by EVERY pass (relations, data,
-    * messages): a frame sitting inside both a stream segment and a
-    * prepared block is malformed no matter its type — blocks and segments
-    * are serialized on the wire. */
-  private def scopeOf(sc: StreamContext, pc: PreparedContext, lsn: Long)
-      : (Option[StreamSegment], Option[PreparedBlock]) =
-    (sc.segmentAt(lsn), pc.blockAt(lsn)) match {
-      case (Some(seg), Some(blk)) =>
-        throw new IllegalStateException(
-          s"frame at lsn $lsn sits inside BOTH stream segment (xid ${seg.xid}) " +
-            s"and prepared block ('${blk.gid}') — blocks are serialized on " +
-            "the wire; the lake is malformed")
-      case other => other
+  /** The pulled frames of the given types, decoded. */
+  private def decodedOf(small: Array[(Long, Array[Byte])],
+      types: Set[Char]): Seq[(Long, PgMessage)] =
+    small.toSeq.collect { case (lsn, b) if types(b(0).toChar) => (lsn, decode(b)) }
+
+  private object FrameScope {
+    def apply(small: Array[(Long, Array[Byte])], excludeOpen: Boolean): FrameScope = {
+      val sc = StreamContext.build(decodedOf(small, StreamControlTypes))
+      val pc = PreparedContext.build(decodedOf(small, PreparedControlTypes))
+      // one xid cannot both resolve at stream level and end prepared
+      val contradictory = (sc.committed ++ sc.aborted) intersect pc.streamXidFate.keySet
+      require(contradictory.isEmpty,
+        s"xids with BOTH a stream-level fate and a Stream Prepare: $contradictory")
+      new FrameScope(sc, pc, excludeOpen)
     }
+  }
 
   /** Decode a frame that arrived INSIDE a stream segment: data types carry
     * an Int32 xid between the type byte and the v1 body — splice it out,
@@ -807,51 +843,65 @@ object PgOutput {
   // ------------------------------------------------------ distributed decode
 
   /** Decode a lake of raw pgoutput frames `(lsn: long, data: binary)` into
-    * the reference's event stream, distributed.
+    * the reference's event stream, distributed. One decoder for protocol
+    * v1, v2 and two-phase lakes: the visible events are the v1 frames, the
+    * streamed frames of COMMITTED transactions (large transactions arrive
+    * as interleaved stream segments whose Stream Commit/Abort lands later)
+    * and the frames of prepared blocks whose COMMIT PREPARED landed;
+    * aborted and rolled-back transactions are discarded wholesale.
     *
-    * Scale shape: relation messages are O(#tables × #schema-versions) — they
-    * are collected once and BROADCAST as a versioned registry, then every
-    * data frame decodes partition-locally (`mapPartitions`, zero shuffle).
-    * LSN-versioned lookup makes the decode independent of partition order,
-    * which is what lets a 100 TB frame lake decode on 1000 executors without
-    * replaying the stream serially. */
-  def decodeFeed(spark: SparkSession, frames: DataFrame): DataFrame = {
-    import spark.implicits._
-    val typed = frames.select(col("lsn").cast("long"), col("data")).as[(Long, Array[Byte])]
-    // first-byte dispatch is COLUMNAR (substring on the binary column, no
-    // typed deserialization), so neither pass decodes rows it won't keep:
-    // the relation pass reads frame type bytes, not a deserialized lake
-    def firstByteIs(types: Seq[Char]) = substring(col("data"), 1, 1)
-      .isin(types.map(c => lit(Array(c.toByte))): _*)
-    val rels = typed
-      .filter(firstByteIs(Seq('R')))
-      .collect() // O(#tables): the only driver-side collect, by design
-      .map { case (lsn, b) => (lsn, decode(b).asInstanceOf[RelationMsg]) }
-    val bc = spark.sparkContext.broadcast(RelationRegistry.build(rels.toSeq))
-    // Begin/Commit and the benign metadata types a real publication emits
-    // (Type 'Y', Origin 'O', logical Message 'M') carry no events and are
-    // ignored, as in the reference's switch. Everything else — the data
-    // types AND any unknown/corrupt type byte (or empty frame) — flows into
-    // the decode pass, where an unknown type fails loudly (PgOutput.decode),
-    // matching the streaming route()'s posture instead of silently dropping
-    // frames.
-    // coalesce: a NULL data cell makes the predicate NULL, which a bare
-    // Filter would silently DROP — route it into decode instead, where the
-    // null/empty guard produces the loud failure this pipeline promises
+    * Scale shape: one bounded driver pull of the small frames
+    * ([[smallFrames]]) — Relation frames become a broadcast LSN-versioned
+    * registry, control frames the broadcast segment/block interval
+    * contexts ([[StreamContext]], [[PreparedContext]]) — then every data
+    * frame decodes partition-locally (`mapPartitions`, zero shuffle),
+    * resolving its schema and its transaction by LSN binary search. That
+    * is what lets a 100 TB frame lake decode on 1000 executors without
+    * replaying the stream serially; a v1 lake costs one small-frame scan
+    * and one data pass.
+    *
+    * `excludeOpen = false` (the gate posture) fails loudly on a streamed
+    * or prepared transaction with no fate in the lake — a COMPLETE lake
+    * missing a fate frame is corruption. `excludeOpen = true` is the
+    * PREFIX-decode policy for a live lake (segments flushed, fate not
+    * yet): unresolved transactions read as invisible — never guessed
+    * visible — and their events appear when the fate lands and the
+    * consumer re-decodes. */
+  def decodeFeed(spark: SparkSession, frames: DataFrame,
+      excludeOpen: Boolean = false): DataFrame = {
+    val typed = typedFrames(frames)
+    decodeEvents(typed, smallFrames(typed, SmallTypes), excludeOpen)
+  }
+
+  /** The registry build and data pass of every row-change decode, over an
+    * already pulled set of small frames. */
+  private def decodeEvents(typed: Dataset[(Long, Array[Byte])],
+      small: Array[(Long, Array[Byte])], excludeOpen: Boolean): DataFrame = {
+    import typed.sparkSession.implicits._
+    val scope = FrameScope(small, excludeOpen)
+    // a Relation inside a segment or block resolves through the same
+    // dispatch as the data frames: a rolled-back (or still-open)
+    // transaction's schema versions must NOT enter the registry — an
+    // aborted DDL registered anyway would silently re-shape every later
+    // frame of that relation id
+    val registry = RelationRegistry.build(small.toSeq.flatMap { case (lsn, b) =>
+      if (b(0) != 'R') None
+      else scope.visible(lsn, b).collect { case r: RelationMsg => (lsn, r) }
+    })
+    val bc = typed.sparkSession.sparkContext.broadcast((scope, registry))
+    // every other frame — the data types AND any unknown/corrupt type byte
+    // or empty frame — flows into the decode, where an unknown type fails
+    // loudly (PgOutput.decode), as in the streaming route(). coalesce: a
+    // NULL data cell makes the predicate NULL, which a bare Filter would
+    // silently DROP — route it into decode's loud null guard instead.
     typed
-      .filter(coalesce(!firstByteIs(Seq('R', 'B', 'C', 'Y', 'O', 'M')), lit(true)))
-      .mapPartitions(it => it.flatMap { case (lsn, b) =>
-        // v2/2PC control frames now DECODE (they would previously fail as
-        // unknown types) — but a v1 decode of such a lake would silently
-        // emit rolled-back/in-doubt rows as visible, so the loud posture
-        // must be explicit here: this lake needs decodeFeedV2
-        if (b != null && b.nonEmpty && ControlTypeBytes.contains(b(0)))
-          throw new IllegalArgumentException(
-            s"v2/2PC control frame '${b(0).toChar}' at lsn $lsn in a v1 " +
-              "decode — this lake carries streamed/prepared transactions; " +
-              "use decodeFeedV2")
-        toEvents(bc.value, lsn, b)
-      })
+      .filter(coalesce(!firstByteIs(SmallTypes ++ NoEventTypes), lit(true)))
+      .mapPartitions { it =>
+        val (sc, reg) = bc.value
+        it.flatMap { case (lsn, b) =>
+          sc.visible(lsn, b).iterator.flatMap(eventsOf(reg, lsn, _))
+        }
+      }
       .toDF()
   }
 
@@ -864,198 +914,58 @@ object PgOutput {
     * breaker: without it, changes replicated from a peer would be
     * re-published back to it forever). None = attribute everything.
     *
-    * Scale shape, mirroring [[decodeFeedV2]]: Begin/Commit/Origin control
-    * frames are O(#txns) — ceiling-guarded pull, interval reconstruction
-    * ([[OriginContext]]), broadcast; data frames decode partition-locally
-    * and resolve their origin by LSN binary search. The origin FILTER
-    * applies during the decode pass, so a subscriber keeping only local
-    * transactions never materializes the foreign rows at all. */
+    * Scale shape: the [[decodeFeed]] pull also takes the Begin/Commit/
+    * Origin frames, O(#txns), reconstructed into the broadcast
+    * [[OriginContext]]; each decoded event resolves its origin by LSN
+    * binary search, and the origin filter runs in the same pass as the
+    * decode. A stream/2PC lake is refused: its streamed and prepared
+    * frames sit outside Begin/Commit framing, so their origin is unknown. */
   def decodeFeedWithOrigin(spark: SparkSession, frames: DataFrame,
       keepOrigins: Option[Set[String]] = None): DataFrame = {
-    import spark.implicits._
-    val typed = frames.select(col("lsn").cast("long"), col("data")).as[(Long, Array[Byte])]
-    val octx = OriginContext.build(
-      boundedControlPull(typed, Seq('B', 'C', 'O')).map(c => (c._1, c._3)).toSeq)
-    val obc = spark.sparkContext.broadcast(octx)
-    def firstByteIs(types: Seq[Char]) = substring(col("data"), 1, 1)
-      .isin(types.map(c => lit(Array(c.toByte))): _*)
-    val rels = typed
-      .filter(firstByteIs(Seq('R')))
-      .collect()
-      .map { case (lsn, b) => (lsn, decode(b).asInstanceOf[RelationMsg]) }
-    val bc = spark.sparkContext.broadcast(RelationRegistry.build(rels.toSeq))
-    typed
-      .filter(coalesce(!firstByteIs(Seq('R', 'B', 'C', 'Y', 'O', 'M')), lit(true)))
-      .mapPartitions { it =>
-        it.flatMap { case (lsn, b) =>
-          if (b != null && b.nonEmpty && ControlTypeBytes.contains(b(0)))
-            throw new IllegalArgumentException(
-              s"v2/2PC control frame '${b(0).toChar}' at lsn $lsn in an " +
-                "origin-aware v1 decode — use decodeFeedV2")
-          val origin = obc.value.originAt(lsn)
-          if (keepOrigins.exists(!_.contains(origin))) Iterator.empty
-          else toEvents(bc.value, lsn, b).map(e =>
-            (e.lsn, e.table_name, e.op, e.before, e.after, origin))
-        }
-      }
-      .toDF("lsn", "table_name", "op", "before", "after", "origin")
-  }
-
-  /** Decode a PROTOCOL-V2 frame lake — raw `(lsn, data)` frames where large
-    * transactions arrive as interleaved stream segments (Stream Start/Stop)
-    * whose fate (Stream Commit/Abort) lands later — into the visible event
-    * stream: v1 frames plus the streamed frames of COMMITTED transactions;
-    * aborted transactions' segments are discarded wholesale.
-    *
-    * Scale shape, mirroring [[decodeFeed]]: the stream CONTROL frames are
-    * O(#segments + #txns) — collected once, reconstructed into interval +
-    * fate sets ([[StreamContext]]), and broadcast; relation frames are
-    * O(#tables × versions) — broadcast registry as before; every data frame
-    * then decodes partition-locally, resolving its stream membership by LSN
-    * binary search. No shuffle, no serial replay — a 100 TB segment-
-    * interleaved lake decodes on 1000 executors. This is why v2 matters at
-    * scale: the v1 protocol ships a transaction only at commit, so a 100 GB
-    * bulk load would stall the slot and balloon primary-side reorder
-    * buffers; v2 streams it in bounded segments as it happens.
-    *
-    * `excludeOpen = false` (the gate posture) fails loudly on a streamed
-    * xid with no Commit/Abort in the lake — a COMPLETE lake missing a fate
-    * frame is corruption. `excludeOpen = true` is the PREFIX-decode policy
-    * for a live lake (segments flushed, fate not yet): unresolved xids read
-    * as invisible — never guessed visible — and their events appear when
-    * the fate lands and the consumer re-decodes. */
-  def decodeFeedV2(spark: SparkSession, frames: DataFrame,
-      excludeOpen: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val typed = frames.select(col("lsn").cast("long"), col("data")).as[(Long, Array[Byte])]
-    def firstByteIs(types: Seq[Char]) = substring(col("data"), 1, 1)
-      .isin(types.map(c => lit(Array(c.toByte))): _*)
-    // pass 1 (bounded, ONE scan): every control frame — stream (S/E/c/A)
-    // and two-phase (b/P/K/r/p) — collected together and split
-    // driver-side into the two context builders
-    val (ctx, pctx) = buildContexts(typed)
-    def visible(xid: Int): Boolean = streamVisible(ctx, pctx, excludeOpen, xid)
-    // pass 2 (bounded): relation frames. A relation INSIDE a segment is
-    // xid-prefixed on the wire (the protocol streams a txn's DDL-refreshed
-    // schemas in its segments); membership resolves through the same
-    // scope rule as the data pass (incl. the malformed both-scopes check),
-    // and a rolled-back (or still-open) transaction's schema versions must
-    // NOT enter the registry — an aborted DDL registered anyway would
-    // silently re-shape every later frame of that relation id.
-    val rels = typed.filter(firstByteIs(Seq('R')))
-      .collect().flatMap { case (lsn, b) =>
-        scopeOf(ctx, pctx, lsn) match {
-          case (Some(seg), _) if !visible(seg.xid) => None
-          case (Some(_), _) => decodeStreamed(b) match {
-            case StreamedMsg(_, r: RelationMsg) => Some((lsn, r))
-            case other => throw new IllegalStateException(s"'R' frame decoded to $other")
-          }
-          case (None, Some(blk)) if !pctx.blockVisible(blk, excludeOpen) =>
-            None // rolled-back/in-doubt prepared DDL stays out of the registry
-          case (None, _) => decode(b) match {
-            case r: RelationMsg => Some((lsn, r))
-            case other => throw new IllegalStateException(s"'R' frame decoded to $other")
-          }
-        }
-      }
-    val bcReg = spark.sparkContext.broadcast(RelationRegistry.build(rels.toSeq))
-    val bcCtx = spark.sparkContext.broadcast(ctx)
-    val bcPctx = spark.sparkContext.broadcast(pctx)
-    val bcExcludeOpen = excludeOpen
-    // pass 3 (distributed): data frames decode partition-locally. Aborted
-    // (and, under excludeOpen, unresolved) transactions' frames are dropped
-    // BEFORE tuple decode — the whole point of the fate filter — and
-    // committed streamed frames unwrap to their v1 messages. The
-    // coalesce(…, true) null-routing and the loud-unknown-type posture
-    // match decodeFeed.
-    typed
-      .filter(coalesce(!firstByteIs(
-        Seq('R', 'B', 'C', 'Y', 'O', 'M', 'S', 'E', 'c', 'A', 'b', 'P', 'K', 'r', 'p')),
-        lit(true)))
-      .mapPartitions { it =>
-        val reg = bcReg.value
-        val sc = bcCtx.value
-        val pc = bcPctx.value
-        def vis(xid: Int): Boolean = streamVisible(sc, pc, bcExcludeOpen, xid)
-        it.flatMap { case (lsn, b) =>
-          scopeOf(sc, pc, lsn) match {
-            case (Some(seg), _) =>
-              if (!vis(seg.xid)) Iterator.empty
-              else decodeStreamed(b) match {
-                case StreamedMsg(xid, inner) =>
-                  require(xid == seg.xid,
-                    s"frame at lsn $lsn carries xid $xid inside segment of ${seg.xid}")
-                  eventsOf(reg, lsn, inner)
-                case other => eventsOf(reg, lsn, other)
-              }
-            case (None, Some(blk)) =>
-              // prepared-block frames are PLAIN v1 (no xid splice); the
-              // block's fate decides visibility
-              if (!pc.blockVisible(blk, bcExcludeOpen)) Iterator.empty
-              else toEvents(reg, lsn, b)
-            case (None, None) => toEvents(reg, lsn, b)
-          }
-        }
-      }
-      .toDF()
+    val typed = typedFrames(frames)
+    val txnTypes = Set('B', 'C', 'O')
+    val small = smallFrames(typed, SmallTypes ++ txnTypes)
+    small.find(f => ControlTypes(f._2(0).toChar)).foreach { case (lsn, b) =>
+      throw new IllegalArgumentException(
+        s"v2/2PC control frame '${b(0).toChar}' at lsn $lsn in an " +
+          "origin-aware decode — this lake carries streamed/prepared " +
+          "transactions, which origin attribution does not support")
+    }
+    val bc = spark.sparkContext.broadcast(OriginContext.build(decodedOf(small, txnTypes)))
+    val originAt = udf((lsn: Long) => bc.value.originAt(lsn))
+    val attributed = decodeEvents(typed, small, excludeOpen = false)
+      .withColumn("origin", originAt(col("lsn")))
+    keepOrigins.fold(attributed)(keep => attributed.filter(col("origin").isin(keep.toSeq: _*)))
   }
 
   /** The logical-message SIDE CHANNEL of a frame lake: every 'M' frame
     * (pg_logical_emit_message) decoded to a typed row — the path a consumer
     * uses to read checkpoint markers / registry pointers / dual-write
-    * fences out of the same WAL its row changes arrive on. Columnar
-    * first-byte dispatch, partition-local decode, zero shuffle — the
-    * decodeFeed shape; the row-change passes ignore 'M' (benign metadata),
-    * this pass ignores everything else, and both read the SAME lake.
-    * Content surfaces as UTF-8 (the emit-message convention for textual
-    * markers); binary payloads would surface as the raw bytes column
-    * instead.
+    * fences out of the same WAL its row changes arrive on. Same pull and
+    * per-frame dispatch as [[decodeFeed]], partition-local, zero shuffle;
+    * the row-change pass ignores 'M' (benign metadata), this pass ignores
+    * everything else, and both read the SAME lake. Content surfaces as
+    * UTF-8 (the emit-message convention for textual markers).
     *
-    * V2-aware: an 'M' frame INSIDE a stream segment is xid-prefixed (a
-    * plain decode would misparse its xid bytes as flags/msg_lsn) and is a
+    * An 'M' frame INSIDE a stream segment is xid-prefixed and is a
     * transactional message of that txn — it surfaces only if the txn
-    * COMMITTED (`excludeOpen` as in decodeFeedV2: unresolved xids read as
-    * invisible instead of throwing). Messages of aborted transactions were
-    * never emitted, semantically. */
+    * COMMITTED (`excludeOpen` as in [[decodeFeed]]). Messages of aborted
+    * transactions were never emitted, semantically. */
   def decodeMessages(spark: SparkSession, frames: DataFrame,
       excludeOpen: Boolean = false): DataFrame = {
     import spark.implicits._
-    val typed = frames.select(col("lsn").cast("long"), col("data")).as[(Long, Array[Byte])]
-    def firstByteIs(types: Seq[Char]) = substring(col("data"), 1, 1)
-      .isin(types.map(c => lit(Array(c.toByte))): _*)
-    val (ctx, pctx) = buildContexts(typed)
-    val bcCtx = spark.sparkContext.broadcast(ctx)
-    val bcPctx = spark.sparkContext.broadcast(pctx)
-    val bcExcludeOpen = excludeOpen
+    val typed = typedFrames(frames)
+    val bc = spark.sparkContext.broadcast(
+      FrameScope(smallFrames(typed, SmallTypes), excludeOpen))
     typed
-      .filter(firstByteIs(Seq('M')))
+      .filter(firstByteIs(Set('M')))
       .mapPartitions { it =>
-        val sc = bcCtx.value
-        val pc = bcPctx.value
-        def vis(xid: Int): Boolean = streamVisible(sc, pc, bcExcludeOpen, xid)
+        val scope = bc.value
         it.flatMap { case (lsn, b) =>
-          val decoded = scopeOf(sc, pc, lsn) match {
-            case (Some(seg), _) =>
-              decodeStreamed(b) match {
-                case StreamedMsg(xid, m: LogicalMsg) =>
-                  require(xid == seg.xid,
-                    s"'M' frame at lsn $lsn carries xid $xid inside segment of ${seg.xid}")
-                  if (vis(xid)) Some(m) else None
-                case other =>
-                  throw new IllegalStateException(s"streamed 'M' frame decoded to $other")
-              }
-            case (None, blk) => decode(b) match {
-              // inside a prepared block: plain framing, block-fated visibility
-              case m: LogicalMsg =>
-                if (blk.forall(pc.blockVisible(_, bcExcludeOpen))) Some(m) else None
-              case other =>
-                throw new IllegalStateException(s"'M' frame decoded to $other")
-            }
-          }
-          decoded.map { case LogicalMsg(flags, msgLsn, prefix, content) =>
+          scope.visible(lsn, b).collect { case LogicalMsg(flags, msgLsn, prefix, content) =>
             (lsn, (flags & 1) == 1, msgLsn, prefix,
               new String(content.toArray, StandardCharsets.UTF_8))
-          }.iterator
+          }
         }
       }
       .toDF("lsn", "transactional", "msg_lsn", "prefix", "content")

@@ -283,7 +283,7 @@ object CdcQueries {
     // partition-local decode — no serial stream replay) must equal the
     // oracle's replay of the placement rule with B's events invisible.
     "cdc_stream_txn" -> ((s, dir) =>
-      PgOutput.toCanonicalFeed(PgOutput.decodeFeedV2(s,
+      PgOutput.toCanonicalFeed(PgOutput.decodeFeed(s,
           s.read.parquet(capturedV2LakeDir(s, dir))))
         .select("lsn", "table_name", "op", "pk", "ts_us", "value")
         .orderBy("lsn")),
@@ -297,7 +297,7 @@ object CdcQueries {
     // resolves its block membership partition-locally — the in-doubt
     // window of 2PC handled order-free at any lake size.
     "cdc_two_phase" -> ((s, dir) =>
-      PgOutput.toCanonicalFeed(PgOutput.decodeFeedV2(s,
+      PgOutput.toCanonicalFeed(PgOutput.decodeFeed(s,
           s.read.parquet(captured2pcLakeDir(s, dir))))
         .select("lsn", "table_name", "op", "pk", "ts_us", "value")
         .orderBy("lsn")),

@@ -32,14 +32,12 @@ object PgOutputStream {
 
   /** Route a raw frame to its relation group(s). TRUNCATE lists several
     * relations in one frame — split it into per-relation single-id TRUNCATE
-    * frames so each group's schema state stays self-contained. Begin/Commit
-    * carry no relation and produce no events: dropped here (their LSN
-    * bookkeeping lives in the slot store, not the decode). Type ('Y'),
-    * Origin ('O'), and logical Message ('M') frames are benign pgoutput
-    * metadata a real publication emits (e.g. 'Y' precedes RelationMessage
-    * for non-builtin column types) — the reference's handler switch ignores
-    * them, so they are dropped rather than killing the stream. Anything
-    * else is a protocol error and fails with a labeled exception. */
+    * frames so each group's schema state stays self-contained. The frame
+    * types that carry no events (`PgOutput.NoEventTypes`: Begin/Commit,
+    * whose LSN bookkeeping lives in the slot store, and the benign
+    * Type/Origin/Message metadata) are dropped, as in the batch decode.
+    * Anything else is a protocol error and fails with a labeled
+    * exception. */
   private def route(lsn: Long, bytes: Array[Byte]): Iterator[(Int, Long, Array[Byte])] =
     bytes(0).toChar match {
       case 'R' | 'I' | 'U' | 'D' => Iterator.single((peekRelId(bytes), lsn, bytes))
@@ -47,7 +45,7 @@ object PgOutputStream {
         val t = PgOutput.decode(bytes).asInstanceOf[TruncateMsg]
         t.relationIds.iterator.map(id =>
           (id, lsn, PgOutput.encode(TruncateMsg(t.options, Seq(id)))))
-      case 'B' | 'C' | 'Y' | 'O' | 'M' => Iterator.empty
+      case t if PgOutput.NoEventTypes(t) => Iterator.empty
       case other => throw new IllegalArgumentException(
         s"unknown pgoutput frame type '$other' at lsn $lsn")
     }

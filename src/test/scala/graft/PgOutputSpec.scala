@@ -288,7 +288,7 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
       20L -> StreamAbortMsg(1, 1))))
   }
 
-  test("decodeFeedV2: committed segments visible, aborted invisible, v1 interleaved") {
+  test("decodeFeed: committed segments visible, aborted invisible, v1 interleaved") {
     def enc(m: PgMessage) = PgOutput.encode(m)
     val lake = Seq(
       1L -> enc(rel),
@@ -311,14 +311,14 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
       502L -> enc(StreamStopMsg),
       600L -> enc(StreamCommitMsg(1, 0.toByte, 600L, 600L, 0L)),
       700L -> enc(StreamAbortMsg(2, 2)))
-    val got = PgOutput.decodeFeedV2(spark, lake.toDF("lsn", "data"))
+    val got = PgOutput.decodeFeed(spark, lake.toDF("lsn", "data"))
       .as[ChangeEvent].collect().sortBy(_.lsn).toSeq
     assert(got.map(e => (e.lsn, e.after("pk"))) ==
       Seq((100L, "1"), (201L, "2"), (202L, "3"), (300L, "4"), (501L, "6")))
     // a frame inside a segment carrying the WRONG xid is a protocol error
     val bad = lake :+ (202L -> enc(StreamedMsg(2, ins(9, "x"))))
     assertThrows[org.apache.spark.SparkException](
-      PgOutput.decodeFeedV2(spark, bad.toDF("lsn", "data")).count())
+      PgOutput.decodeFeed(spark, bad.toDF("lsn", "data")).count())
   }
 
   test("origin attribution: Origin marks its WHOLE transaction, locals " +
@@ -374,6 +374,35 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
     assert(e4.getMessage.contains("torn lake"))
   }
 
+  test("the origin-aware decode refuses stream and 2PC lakes loudly") {
+    // streamed and prepared frames sit outside Begin/Commit framing, so
+    // their origin is unknown: attributing them "local" would be a guess
+    def enc(m: PgMessage) = PgOutput.encode(m)
+    val v1 = Seq(
+      1L -> enc(rel),
+      100L -> enc(BeginMsg(199L, 0L, 1)),
+      110L -> enc(ins(1, "local-a")),
+      199L -> enc(CommitMsg(0.toByte, 199L, 200L, 0L)))
+    val streamed = v1 ++ Seq(
+      300L -> enc(StreamStartMsg(5, firstSegment = true)),
+      301L -> enc(StreamedMsg(5, ins(2, "s"))),
+      302L -> enc(StreamStopMsg),
+      400L -> enc(StreamCommitMsg(5, 0.toByte, 400L, 400L, 0L)))
+    val prepared = v1 ++ Seq(
+      300L -> enc(BeginPrepareMsg(300L, 302L, 0L, 6, "g")),
+      301L -> enc(ins(3, "p")),
+      302L -> enc(PrepareMsg(0.toByte, 300L, 302L, 0L, 6, "g")),
+      400L -> enc(CommitPreparedMsg(0.toByte, 400L, 400L, 0L, 6, "g")))
+    assert(PgOutput.decodeFeedWithOrigin(spark, v1.toDF("lsn", "data")).count() == 1L)
+    Seq(streamed -> 'S', prepared -> 'b').foreach { case (lake, first) =>
+      val e = intercept[IllegalArgumentException](
+        PgOutput.decodeFeedWithOrigin(spark, lake.toDF("lsn", "data")).count())
+      assert(e.getMessage.contains(s"control frame '$first' at lsn 300"), e.getMessage)
+      // the same lake decodes through decodeFeed, which resolves the fates
+      assert(PgOutput.decodeFeed(spark, lake.toDF("lsn", "data")).count() == 2L)
+    }
+  }
+
   test("the v2/2PC driver-context bound is ENFORCED: control frames past " +
       "graft.cdc.maxControlFrames fail loudly before the pull") {
     def enc(m: PgMessage) = PgOutput.encode(m)
@@ -386,11 +415,11 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
     spark.conf.set("graft.cdc.maxControlFrames", "2")
     try {
       val e = intercept[IllegalArgumentException](
-        PgOutput.decodeFeedV2(spark, lake.toDF("lsn", "data")).count())
+        PgOutput.decodeFeed(spark, lake.toDF("lsn", "data")).count())
       assert(e.getMessage.contains("graft.cdc.maxControlFrames"))
     } finally spark.conf.unset("graft.cdc.maxControlFrames")
     // under the default ceiling the same feed decodes fine
-    assert(PgOutput.decodeFeedV2(spark, lake.toDF("lsn", "data")).count() == 1L)
+    assert(PgOutput.decodeFeed(spark, lake.toDF("lsn", "data")).count() == 1L)
   }
 
   test("savepoint-level Stream Abort (subXid != xid) fails loudly, never conflates") {
@@ -419,7 +448,7 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
       // not the rolled-back 3-column one
       200L -> enc(ins(1, "alive")),
       300L -> enc(StreamAbortMsg(2, 2)))
-    val got = PgOutput.decodeFeedV2(spark, lake.toDF("lsn", "data"))
+    val got = PgOutput.decodeFeed(spark, lake.toDF("lsn", "data"))
       .as[ChangeEvent].collect().toSeq
     assert(got.map(_.lsn) == Seq(200L))
     assert(got.head.after.keySet == Set("pk", "v"),
@@ -436,14 +465,14 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
       202L -> enc(StreamStopMsg))
     // default posture: a COMPLETE lake missing a fate frame is corruption
     assertThrows[org.apache.spark.SparkException](
-      PgOutput.decodeFeedV2(spark, lake.toDF("lsn", "data")).count())
+      PgOutput.decodeFeed(spark, lake.toDF("lsn", "data")).count())
     // prefix-decode posture: the open txn is invisible (never guessed)
-    val open = PgOutput.decodeFeedV2(spark, lake.toDF("lsn", "data"),
+    val open = PgOutput.decodeFeed(spark, lake.toDF("lsn", "data"),
       excludeOpen = true).as[ChangeEvent].collect().toSeq
     assert(open.map(_.lsn) == Seq(100L))
     // once the fate lands, a re-decode surfaces the committed events
     val fated = lake :+ (300L -> enc(StreamCommitMsg(3, 0.toByte, 300L, 300L, 0L)))
-    val after = PgOutput.decodeFeedV2(spark, fated.toDF("lsn", "data"),
+    val after = PgOutput.decodeFeed(spark, fated.toDF("lsn", "data"),
       excludeOpen = true).as[ChangeEvent].collect().toSeq
     assert(after.map(_.lsn) == Seq(100L, 201L))
   }
@@ -496,7 +525,7 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
       202L -> enc(PrepareMsg(0.toByte, 200L, 202L, 0L, 12, "gr")),
       300L -> enc(CommitPreparedMsg(0.toByte, 300L, 300L, 0L, 11, "gc")),
       400L -> enc(RollbackPreparedMsg(0.toByte, 202L, 400L, 0L, 0L, 12, "gr")))
-    val got = PgOutput.decodeFeedV2(spark, lake.toDF("lsn", "data"))
+    val got = PgOutput.decodeFeed(spark, lake.toDF("lsn", "data"))
       .as[ChangeEvent].collect().sortBy(_.lsn).toSeq
     assert(got.map(e => (e.lsn, e.after("pk"))) ==
       Seq((50L, "1"), (101L, "2"), (102L, "3")))
@@ -504,8 +533,8 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
     // under the prefix-decode policy — 2PC's whole point is that window
     val inDoubt = lake.filterNot(f => f._1 == 300L || f._1 == 400L)
     assertThrows[org.apache.spark.SparkException](
-      PgOutput.decodeFeedV2(spark, inDoubt.toDF("lsn", "data")).count())
-    val open = PgOutput.decodeFeedV2(spark, inDoubt.toDF("lsn", "data"),
+      PgOutput.decodeFeed(spark, inDoubt.toDF("lsn", "data")).count())
+    val open = PgOutput.decodeFeed(spark, inDoubt.toDF("lsn", "data"),
       excludeOpen = true).as[ChangeEvent].collect().toSeq
     assert(open.map(_.lsn) == Seq(50L))
   }
@@ -531,15 +560,15 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
     val resolved = lakeFor(Seq(
       400L -> CommitPreparedMsg(0.toByte, 400L, 400L, 0L, 21, "g21"),
       500L -> RollbackPreparedMsg(0.toByte, 310L, 500L, 0L, 0L, 22, "g22")))
-    val got = PgOutput.decodeFeedV2(spark, resolved)
+    val got = PgOutput.decodeFeed(spark, resolved)
       .as[ChangeEvent].collect().sortBy(_.lsn).toSeq
     assert(got.map(e => (e.lsn, e.after("pk"))) == Seq((50L, "1"), (101L, "2")))
     // in-doubt: both prepared, no gid fate — loud by default, invisible
     // under the prefix policy
     val inDoubt = lakeFor(Nil)
     assertThrows[org.apache.spark.SparkException](
-      PgOutput.decodeFeedV2(spark, inDoubt).count())
-    val open = PgOutput.decodeFeedV2(spark, inDoubt, excludeOpen = true)
+      PgOutput.decodeFeed(spark, inDoubt).count())
+    val open = PgOutput.decodeFeed(spark, inDoubt, excludeOpen = true)
       .as[ChangeEvent].collect().toSeq
     assert(open.map(_.lsn) == Seq(50L))
     // contradiction: a stream-level fate AND a Stream Prepare on one xid
@@ -551,7 +580,7 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
       30L -> enc(StreamPrepareMsg(0.toByte, 30L, 30L, 0L, 9, "g9")),
       40L -> enc(StreamCommitMsg(9, 0.toByte, 40L, 40L, 0L)))).toDF("lsn", "data")
     assertThrows[IllegalArgumentException](
-      PgOutput.decodeFeedV2(spark, contradictory).count())
+      PgOutput.decodeFeed(spark, contradictory).count())
   }
 
   test("gid reuse: fates pair with the pending prepared txn, never a flat gid set") {
@@ -573,14 +602,14 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
     // the second block is in doubt: loud by default, invisible under the
     // prefix policy — and the FIRST block's commit still applies
     assertThrows[org.apache.spark.SparkException](
-      PgOutput.decodeFeedV2(spark, lake.toDF("lsn", "data")).count())
-    val open = PgOutput.decodeFeedV2(spark, lake.toDF("lsn", "data"),
+      PgOutput.decodeFeed(spark, lake.toDF("lsn", "data")).count())
+    val open = PgOutput.decodeFeed(spark, lake.toDF("lsn", "data"),
       excludeOpen = true).as[ChangeEvent].collect().toSeq
     assert(open.map(_.lsn) == Seq(101L))
     // reuse + rollback of the SECOND block resolves correctly too
     val resolved = lake :+
       (400L -> enc(RollbackPreparedMsg(0.toByte, 302L, 400L, 0L, 0L, 32, "g")))
-    val got = PgOutput.decodeFeedV2(spark, resolved.toDF("lsn", "data"))
+    val got = PgOutput.decodeFeed(spark, resolved.toDF("lsn", "data"))
       .as[ChangeEvent].collect().toSeq
     assert(got.map(_.lsn) == Seq(101L))
     // malformed: re-preparing a gid that is STILL pending
@@ -598,11 +627,9 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
       20L -> StreamPrepareMsg(0.toByte, 20L, 20L, 0L, 5, "b"))))
   }
 
-  test("the v1 decode stays LOUD on v2/2PC lakes instead of leaking block rows") {
-    // decodeFeed has no fate machinery: silently decoding a 2PC lake would
-    // emit a ROLLED-BACK block's plain data frames as visible. The control
-    // frames now decode (no longer unknown types), so the loudness is an
-    // explicit check.
+  test("decodeFeed leaks no row of a rolled-back prepared block") {
+    // the block's data frames are plain v1 frames: a decode without fate
+    // machinery would emit them as visible
     def enc(m: PgMessage) = PgOutput.encode(m)
     val lake = Seq(
       1L -> enc(rel),
@@ -610,18 +637,14 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
       101L -> enc(ins(1, "rolled-back")),
       102L -> enc(PrepareMsg(0.toByte, 100L, 102L, 0L, 41, "gx")),
       200L -> enc(RollbackPreparedMsg(0.toByte, 102L, 200L, 0L, 0L, 41, "gx")))
-    val e = intercept[org.apache.spark.SparkException](
-      PgOutput.decodeFeed(spark, lake.toDF("lsn", "data")).count())
-    def msgs(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
-    assert(msgs(e).exists(_.contains("use decodeFeedV2")))
+    assert(PgOutput.decodeFeed(spark, lake.toDF("lsn", "data")).count() == 0L)
   }
 
   test("framesFromEvents2PC decodes to exactly the committed + v1 events") {
     val events = sources.Tables(spark, sf, "events").limit(300)
     val frames = PgOutput.framesFromEvents2PC(spark, events)
     assert(frames.count() == frames.select("lsn").distinct().count())
-    val got = PgOutput.toCanonicalFeed(PgOutput.decodeFeedV2(spark, frames))
+    val got = PgOutput.toCanonicalFeed(PgOutput.decodeFeed(spark, frames))
       .select("table_name", "op", "pk", "ts_us", "value")
     // visible = everything except the ROLLED-BACK gid (user_id % 7 == 3)
     val expected = ChangeFeed.fromEvents(events)
@@ -637,7 +660,7 @@ class PgOutputV2Spec extends AnyFunSuite with SparkTestBase {
     // lsn uniqueness: v1 grid, segment blocks, and control frames never
     // collide (the interval attribution depends on it)
     assert(frames.count() == frames.select("lsn").distinct().count())
-    val got = PgOutput.toCanonicalFeed(PgOutput.decodeFeedV2(spark, frames))
+    val got = PgOutput.toCanonicalFeed(PgOutput.decodeFeed(spark, frames))
       .select("table_name", "op", "pk", "ts_us", "value")
     // visible = everything except the ABORTED txn (user_id % 7 == 1)
     val expected = ChangeFeed.fromEvents(events)

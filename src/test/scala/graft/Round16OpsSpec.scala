@@ -126,12 +126,12 @@ class Round16OpsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("PrefixSum.cumSum stays exact when the input subtree carries a " +
-      "declared-layout artifact (the PsProbe hazard: self-join dedup " +
-      "breaks cache substitution, splitting the pid mapping)") {
+      "declared-layout artifact (self-join dedup must not split the two " +
+      "sides' range-partition ids)") {
     // the q_spearman shape that failed the sf0.01 oracle: a cutPartitioned
-    // artifact feeding the marginal cumsum. Before the pinnedPids fix the
-    // offsets side recomputed its own range exchange with different
-    // rdd.id-seeded boundaries and most cumsums came back wrong.
+    // artifact feeding the marginal cumsum. When the two sides of the
+    // offset join-back each planned their own range exchange, their
+    // rdd.id-seeded boundaries differed and most cumsums came back wrong.
     val base = spark.range(20000).select(
       (col("id") % 3).cast("string").as("flag"),
       (col("id") % 997).as("y"),

@@ -19,6 +19,12 @@ if [ $# -lt 4 ]; then
 fi
 parent=$1 change=$2 workload=$3
 shift 3
+if [ $# -lt 10 ]; then
+  echo "[ab] warning: $# pairs; run-to-run spread on 4 cores needs >= 10" \
+    "alternating pairs to resolve a ~10% difference (analytics_mix" \
+    "latency_p50_ms gave opposite verdicts in two 4-pair batches of" \
+    "identical code)" >&2
+fi
 repo=$(git -C "$(dirname "$0")" rev-parse --show-toplevel)
 work=$(mktemp -d "${TMPDIR:-/tmp}/ab.XXXXXX")
 cleanup() {

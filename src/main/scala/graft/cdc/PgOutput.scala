@@ -585,24 +585,20 @@ object PgOutput {
     substring(col("data"), 1, 1).isin(types.toSeq.map(c => lit(Array(c.toByte))): _*)
 
   /** The ONE driver pull of a batch decode: every frame whose type is in
-    * `types`, in one scan. The ceiling is applied IN THE PLAN
-    * (`limit(ceiling + 1)`, the BoundedPull pattern), so a lake whose small
-    * frames outgrow it — or a live lake that grows while it is read —
-    * moves at most ceiling + 1 frames to the driver, then fails loudly. */
+    * `types`, in one scan, through [[graft.operators.BoundedPull]]: the
+    * ceiling is applied IN THE PLAN, so a lake whose small frames outgrow
+    * it — or a live lake that grows while it is read — moves at most
+    * ceiling + 1 frames to the driver, then fails loudly. */
   private def smallFrames(typed: Dataset[(Long, Array[Byte])],
       types: Set[Char]): Array[(Long, Array[Byte])] = {
     val max = typed.sparkSession.conf
       .getOption("graft.cdc.maxControlFrames").map(_.toInt)
       .getOrElse(MaxControlFramesDefault)
-    val pulled = typed.filter(firstByteIs(types)).limit(max + 1).collect()
-    require(pulled.length <= max,
-      s"more than $max relation/control frames, past the driver-context " +
-        "ceiling (graft.cdc.maxControlFrames) — the registry and " +
-        "interval contexts are built driver-side and this feed's " +
-        "transaction count breaks the O(#txns)-is-small assumption; raise " +
-        "the ceiling only with driver memory to match, or chunk the feed " +
-        "by LSN range")
-    pulled
+    graft.operators.BoundedPull.rows(typed.filter(firstByteIs(types)), max,
+      "pgoutput relation/control frames (ceiling graft.cdc.maxControlFrames: " +
+        "the registry and transaction contexts are built driver-side, so " +
+        "raise it only with driver memory to match, or chunk the feed by " +
+        "LSN range)")
   }
 
   /** What a batch decode knows about a lake's transactions, built from the
@@ -834,7 +830,8 @@ object PgOutput {
       case _: BeginMsg | _: CommitMsg | _: RelationMsg | _: StreamStartMsg |
            StreamStopMsg | _: StreamCommitMsg | _: StreamAbortMsg |
            _: LogicalMsg | _: BeginPrepareMsg | _: PrepareMsg |
-           _: CommitPreparedMsg | _: RollbackPreparedMsg | _: StreamPrepareMsg =>
+           _: CommitPreparedMsg | _: RollbackPreparedMsg | _: StreamPrepareMsg |
+           _: TypeMsg | _: OriginMsg =>
         Iterator.empty
       case StreamedMsg(_, inner) => eventsOf(registry, lsn, inner)
     }

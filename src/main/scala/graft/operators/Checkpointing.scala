@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.graftshim.StreamingBridge
 
 /** Lineage truncation with a cluster-safe escape hatch.
   *
@@ -70,40 +72,30 @@ object Checkpointing {
     * banding self-join) where the corpus-sized side must shuffle once at
     * build, never once per round.
     *
-    * Two passes, deliberately:
+    * One pass under the session's own AQE, one stored artifact: the BUILD
+    * runs once (`queryExecution.toRdd` executes its shuffle stages with
+    * AQE's runtime broadcast and coalescing — pagerank's build joins); the
+    * RELAYOUT reads that RDD through a `LogicalRDD` as
+    * `repartition(n, keys)` + `sortWithinPartitions(keys)` (AQE never
+    * coalesces an explicit count) and is checkpointed eagerly, reliable or
+    * local as [[cut]]. The artifact declares the partitioning and ordering
+    * of the FINAL AQE plan (`AdaptiveSparkPlanExec.executedPlan`: Sort over
+    * a hashpartitioning(keys, n) stage). `Dataset.checkpoint` cannot: it
+    * reads the AQE root, `UnknownPartitioning(0)`, so a plain [[cut]] of
+    * repartition+sort loses the layout (`Round16OpsSpec` pins both).
+    * Consumer plans show `Scan ExistingRDD ... hashpartitioning(keys, n)`
+    * with no Exchange/Sort above it.
     *
-    * 1. The BUILD runs under the session's normal AQE into a plain `cut` —
-    *    the build may contain joins/aggregates (pagerank's edge×out-weight
-    *    join) that need AQE's runtime broadcast/coalescing; running the
-    *    whole build AQE-off was measured 30% slower cold (17.6 s vs
-    *    13.2 s, q_pagerank sf0.1 rep 1).
-    * 2. The RELAYOUT — repartition on `keys` + sort of the now-materialized
-    *    artifact, a plain two-stage job with no joins — runs with AQE
-    *    disabled, because `Dataset.checkpoint` captures
-    *    `executedPlan.outputPartitioning/outputOrdering` into the
-    *    LogicalRDD and an `AdaptiveSparkPlanExec` root reports
-    *    `UnknownPartitioning(0)`/no ordering (measured on Spark 4.1.2 —
-    *    every r15 repartition-inside-cut artifact came back unknown, so
-    *    every round still re-exchanged). With AQE off the relayout plan is
-    *    exactly Exchange(hashpartitioning(keys, n)) → Sort, Spark captures
-    *    that truthfully, and consumer plans show
-    *    `Scan ExistingRDD ... hashpartitioning(keys, n)` with no
-    *    Exchange/Sort above it.
+    * n is the partition count of the AQE-run build
+    * (advisory-partition-size / parallelism-first driven —
+    * input-proportional at cluster scale), so the layout stays
+    * scale-adaptive and toy-scale rounds do not pay thousands of empty
+    * tasks. It is measured, not estimated: join statistics multiply child
+    * sizes (4.27e12 B estimated for q_pagerank's 1.17M-row artifact).
     *
-    * The partition count n is NOT a constant: it is whatever partition
-    * count the AQE-sized build cut settled on (advisory-partition-size /
-    * parallelism-first driven — input-proportional at cluster scale), so
-    * the layout stays scale-adaptive and toy-scale rounds do not pay
-    * thousands of empty tasks. AQE loses nothing in the relayout window:
-    * the one thing it could do there — coalesce the repartition — is
-    * exactly what must NOT happen (coalesced hash buckets are no longer
-    * HashPartitioning, so the layout could not be declared or reused).
-    * The build cut's blocks become unreferenced on return and are
-    * reclaimed by the ContextCleaner.
-    *
-    * Consumer-side reuse rules, measured on Spark 4.1.2
-    * (the test-scope tools.CutPartExperiment + the committed r16 plan
-    * dumps):
+    * Consumer-side reuse rules, measured on Spark 4.1.2 (`Round16OpsSpec`
+    * pins the capture and the zero-Exchange/zero-Sort consumer join; the
+    * committed `plans/r16` dumps show the rounds):
     * a join whose other side ALREADY carries its own exchange (an
     * aggregate upstream) streams the artifact without Exchange/Sort iff
     * n >= spark.sql.shuffle.partitions (below that the planner
@@ -132,17 +124,21 @@ object Checkpointing {
   def cutPartitioned(df: DataFrame, floorParallelism: Boolean,
                      keys: String*): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val base = cut(df)
+    val built = df.queryExecution.toRdd
     val floor = if (floorParallelism)
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt else 1
-    val n = math.max(base.rdd.getNumPartitions, floor)
-    val s = df.sparkSession
-    val aqe = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(aqe)
-    s.conf.set(aqe, "false")
-    try cut(base.repartition(n, keys.map(col): _*)
-      .sortWithinPartitions(keys.head, keys.tail: _*))
-    finally s.conf.set(aqe, prev)
+    val n = math.max(built.getNumPartitions, floor)
+    val relaid = StreamingBridge.rowsOf(df, built, df.queryExecution.executedPlan)
+      .repartition(n, keys.map(col): _*)
+      .sortWithinPartitions(keys.head, keys.tail: _*)
+    val stored = StreamingBridge.checkpointNow(relaid.queryExecution.toRdd)
+    val out = StreamingBridge.rowsOf(relaid, stored,
+      relaid.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      })
+    dumpArtifact("cutPartitioned", df, out)
+    out
   }
 
   /** Recursive delete of a scratch tree (checkpoint/state-store dirs the

@@ -554,6 +554,29 @@ object TxLog {
     val name =
       if (appId == "stream") f"b$batchId%010d" else f"b-$appId-$batchId%010d"
     val st = planState(s, table) // ONE checkpoint-accelerated walk
+    if (!verifiedReplay(st, table, appId, batchId, name,
+        emptyDelivery = false)) {
+      batch.write.mode("overwrite").parquet(s"$table/$name")
+      val (stats, nRows) =
+        statsAndRows(s.read.parquet(s"$table/$name"), statsCols)
+      val v = st.head.fold(0L)(_ + 1L)
+      require(tryCommitActions(s, table, v,
+          Seq(AddFile(name, stats, rows = Some(nRows))), Nil,
+          txns = Seq(appId -> batchId), cdf = Some("@adds")),
+        s"$table: version $v was committed by another writer while this " +
+          "batch wrote its data — two writers share one sink table; " +
+          "re-run the batch (the replay watermark makes the retry safe)")
+      maybeAutoCheckpoint(s, table, v)
+    }
+  }
+
+  /** The producer-transaction replay check of [[commitBatch]] and
+    * [[commitStagedFiles]]: true for a verified replay of batch `batchId`
+    * (data dir `name`), false for a fresh delivery whose dir is not live;
+    * loud otherwise. `emptyDelivery` accepts a recorded delivery with no
+    * adds (the streaming sink commits empty batches). */
+  private def verifiedReplay(st: PlanState, table: String, appId: String,
+      batchId: Long, name: String, emptyDelivery: Boolean): Boolean =
     st.txnWatermarks.get(appId) match {
       case Some(w) if w >= batchId =>
         // replay: verify the recording commit when it is still in the
@@ -562,13 +585,16 @@ object TxLog {
         // the delivery — and the recording commit may be truncated)
         st.suffix.find(_.txns.contains(appId -> batchId)) match {
           case Some(rec) =>
-            require(rec.adds.map(_.name) == Seq(name),
+            val expected =
+              if (emptyDelivery && rec.adds.isEmpty) Nil else Seq(name)
+            require(rec.adds.map(_.name) == expected,
               s"$table: '$appId' batch $batchId is recorded at " +
                 s"v${rec.version} with adds " +
                 s"[${rec.adds.map(_.name).mkString(",")}], not the expected " +
-                s"[$name] — this table was not built by this stream (a " +
-                "fresh checkpoint pointed at a foreign table under the " +
-                "same appId is a misconfiguration, not a replay)")
+                s"[${expected.mkString(",")}] — this table was not built " +
+                "by this stream (a fresh checkpoint pointed at a foreign " +
+                "table under the same appId is a misconfiguration, not a " +
+                "replay)")
           case None =>
             // SUBSUMED replay (r13 — the judged quiet-failure hole): the
             // recording commit is at-or-before the checkpoint, so the
@@ -589,32 +615,22 @@ object TxLog {
                 "fresh checkpoint was pointed at a foreign table under " +
                 "the same appId (misconfiguration, not a replay)")
         }
+        true
       case _ =>
         // NOT delivered by this producer — but the target dir must not be
         // LIVE: a live dir of this name means a producer that records no
         // transactions (a pre-txn table) or a foreign producer sharing
-        // the naming delivered it, and the mode-overwrite below would
-        // destroy live data and publish a duplicate add (corrupting the
-        // log). Loud instead — migration/misconfiguration, not a replay.
+        // the naming delivered it, and writing it again would destroy
+        // live data and publish a duplicate add (corrupting the log).
+        // Loud instead — migration/misconfiguration, not a replay.
         require(!st.liveAdds.exists(_.name == name),
           s"$table: data dir $name is already LIVE but '$appId' has no " +
             s"delivery record for batch $batchId — this table was written " +
             "by a producer that does not record transactions, or a " +
             "foreign producer shares the naming; refusing to overwrite " +
             "live data")
-        batch.write.mode("overwrite").parquet(s"$table/$name")
-        val (stats, nRows) =
-          statsAndRows(s.read.parquet(s"$table/$name"), statsCols)
-        val v = st.head.fold(0L)(_ + 1L)
-        require(tryCommitActions(s, table, v,
-            Seq(AddFile(name, stats, rows = Some(nRows))), Nil,
-            txns = Seq(appId -> batchId), cdf = Some("@adds")),
-          s"$table: version $v was committed by another writer while this " +
-            "batch wrote its data — two writers share one sink table; " +
-            "re-run the batch (the replay watermark makes the retry safe)")
-        maybeAutoCheckpoint(s, table, v)
+        false
     }
-  }
 
   /** [[commitBatch]]'s contract over files ALREADY WRITTEN by executors
     * (r15 — the DSv2 STREAMING SINK's commit leg): same producer-
@@ -641,72 +657,41 @@ object TxLog {
     var attempts = 0
     while (true) {
       val st = planState(s, table) // ONE checkpoint-accelerated walk
-      st.txnWatermarks.get(appId) match {
-        case Some(w) if w >= batchId =>
-          // replay — the same verify ladder as commitBatch
-          st.suffix.find(_.txns.contains(appId -> batchId)) match {
-            case Some(rec) =>
-              val expected = if (rec.adds.isEmpty) Nil else Seq(name)
-              require(rec.adds.map(_.name) == expected,
-                s"$table: '$appId' batch $batchId is recorded at " +
-                  s"v${rec.version} with adds " +
-                  s"[${rec.adds.map(_.name).mkString(",")}], not the " +
-                  s"expected [${expected.mkString(",")}] — this table was " +
-                  "not built by this stream (a fresh checkpoint pointed " +
-                  "at a foreign table under the same appId is a " +
-                  "misconfiguration, not a replay)")
-            case None =>
-              val rewritten = st.liveAdds.exists(a =>
-                RewriteDirRe.matches(a.name))
-              require(rewritten || st.liveAdds.exists(_.name == name),
-                s"$table: '$appId' claims batch $batchId is delivered " +
-                  "(checkpoint-subsumed record) but the snapshot's live " +
-                  s"set carries neither $name nor any compaction rewrite " +
-                  "— a fresh checkpoint was pointed at a foreign table " +
-                  "under the same appId (misconfiguration, not a replay)")
+      if (verifiedReplay(st, table, appId, batchId, name,
+          emptyDelivery = true)) return false
+      val v = st.head.fold(0L)(_ + 1L)
+      val ddl = if (st.schemaDdl.isEmpty) schemaDdl else None
+      val adds =
+        if (stagedFiles.isEmpty) Nil
+        else {
+          val f = fsOf(s, new Path(table))
+          val dst = new Path(table, name)
+          // first attempt moves the bytes; a CAS retry reuses them
+          if (!f.exists(dst)) {
+            require(f.mkdirs(dst), s"$table: cannot create $dst")
+            stagedFiles.foreach(p =>
+              require(f.rename(p, new Path(dst, p.getName)),
+                s"$table: cannot move staged $p into $dst"))
           }
-          return false
-        case _ =>
-          require(!st.liveAdds.exists(_.name == name),
-            s"$table: data dir $name is already LIVE but '$appId' has no " +
-              s"delivery record for batch $batchId — this table was " +
-              "written by a producer that does not record transactions, " +
-              "or a foreign producer shares the naming; refusing to " +
-              "overwrite live data")
-          val v = st.head.fold(0L)(_ + 1L)
-          val ddl = if (st.schemaDdl.isEmpty) schemaDdl else None
-          val adds =
-            if (stagedFiles.isEmpty) Nil
-            else {
-              val f = fsOf(s, new Path(table))
-              val dst = new Path(table, name)
-              // first attempt moves the bytes; a CAS retry reuses them
-              if (!f.exists(dst)) {
-                require(f.mkdirs(dst), s"$table: cannot create $dst")
-                stagedFiles.foreach(p =>
-                  require(f.rename(p, new Path(dst, p.getName)),
-                    s"$table: cannot move staged $p into $dst"))
-              }
-              val (stats, nRows) =
-                statsAndRows(s.read.parquet(s"$table/$name"), statsCols)
-              Seq(AddFile(name, stats, rows = Some(nRows)))
-            }
-          val committed = tryCommitActions(s, table, v, adds, Nil,
-            schemaDdl = ddl, txns = Seq(appId -> batchId),
-            cdf = Some("@adds"))
-          if (committed) {
-            maybeAutoCheckpoint(s, table, v)
-            return true
-          }
-          attempts += 1
-          require(attempts < 64,
-            s"$table: lost the commit CAS $attempts times delivering " +
-              s"'$appId' batch $batchId — a pathologically hot foreign " +
-              "writer; re-run the batch")
-        // loop: re-plan — the interleaved commit may itself have been
-        // this producer's (a zombie driver); the watermark re-check
-        // above turns that into a verified replay, never a double add
+          val (stats, nRows) =
+            statsAndRows(s.read.parquet(s"$table/$name"), statsCols)
+          Seq(AddFile(name, stats, rows = Some(nRows)))
+        }
+      val committed = tryCommitActions(s, table, v, adds, Nil,
+        schemaDdl = ddl, txns = Seq(appId -> batchId),
+        cdf = Some("@adds"))
+      if (committed) {
+        maybeAutoCheckpoint(s, table, v)
+        return true
       }
+      attempts += 1
+      require(attempts < 64,
+        s"$table: lost the commit CAS $attempts times delivering " +
+          s"'$appId' batch $batchId — a pathologically hot foreign " +
+          "writer; re-run the batch")
+      // loop: re-plan — the interleaved commit may itself have been
+      // this producer's (a zombie driver); the watermark re-check
+      // above turns that into a verified replay, never a double add
     }
     false // unreachable
   }

@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.StructType
 
@@ -17,7 +20,8 @@ import org.apache.spark.sql.types.StructType
   * `LogicalRelation(relation, isStreaming = true)`). Nothing about the
   * scan changes: same files, same pushdown, same codegen — only the
   * plan's streaming bit, which is what lets the incremental parquet
-  * scan ride inside a streaming query plan. */
+  * scan ride inside a streaming query plan. The seam also serves the MERGE
+  * interception and `Checkpointing.cutPartitioned`. */
 object StreamingBridge {
 
   /** Re-tag `df`'s leaf relations as streaming — the FileStreamSource
@@ -46,6 +50,30 @@ object StreamingBridge {
   def dfOf(s: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     ClassicDataset.ofRows(s.asInstanceOf[ClassicSparkSession], plan)
+
+  /** A frame over `rows`, the executed output of `origin`, with origin's
+    * output, statistics and constraints — `Dataset.checkpoint`'s
+    * `LogicalRDD` — declaring the layout of `executed`, not of the root
+    * plan (an `AdaptiveSparkPlanExec` root reports `UnknownPartitioning`). */
+  def rowsOf(origin: DataFrame, rows: RDD[InternalRow],
+      executed: SparkPlan): DataFrame = {
+    val cds = origin.asInstanceOf[ClassicDataset[Row]]
+    val (stats, constraints) = LogicalRDD.rewriteStatsAndConstraints(
+      cds.logicalPlan, cds.queryExecution.optimizedPlan)
+    dfOf(cds.sparkSession, LogicalRDD(cds.logicalPlan.output, rows,
+      executed.outputPartitioning, executed.outputOrdering)(
+      cds.sparkSession, stats, constraints))
+  }
+
+  /** Store `rows` in one job, as `Dataset.checkpoint(eager = true)` does:
+    * reliably when the context has a checkpoint dir, locally otherwise. */
+  def checkpointNow(rows: RDD[InternalRow]): RDD[InternalRow] = {
+    val stored = rows.map(_.copy())
+    if (stored.sparkContext.getCheckpointDir.isDefined) stored.checkpoint()
+    else stored.localCheckpoint()
+    stored.doCheckpoint()
+    stored
+  }
 
   /** A Column over a catalyst Expression — `ExpressionUtils.column` is
     * private[sql]; the MERGE interception rebuilds action expressions

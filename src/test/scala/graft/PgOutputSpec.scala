@@ -151,6 +151,14 @@ class PgOutputSpec extends AnyFunSuite with SparkTestBase {
     assertThrows[IllegalStateException](PgOutput.toEvents(reg, 1L, bytes).toSeq)
   }
 
+  test("toEvents returns no events for Type ('Y') and Origin ('O') frames") {
+    val reg = RelationRegistry.build(Nil)
+    Seq[PgMessage](TypeMsg(16400, "public", "mood"),
+        OriginMsg(7000L, "upstream")).foreach { m =>
+      assert(PgOutput.toEvents(reg, 1L, PgOutput.encode(m)).isEmpty, m)
+    }
+  }
+
   test("streaming decode: registry state survives batches, schema change applies mid-stream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext

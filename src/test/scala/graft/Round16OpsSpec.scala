@@ -71,6 +71,68 @@ class Round16OpsSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("no job started by cutPartitioned runs with AQE switched off (the " +
+      "call writes no session conf that a concurrent query could read)") {
+    val sc = spark.sparkContext
+    val mark = "graft.test.cutPartitioned"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(mark)) match {
+          case Some("call") => jobs.add(e.properties)
+          case Some("drain") => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(mark, "call")
+      graft.operators.Checkpointing.cutPartitioned(graph, "src")
+      graft.operators.Checkpointing.cutPartitioned(
+        graph, floorParallelism = true, "src", "dst")
+      // one listener queue delivers in order: once the drain job's start
+      // arrives, every job the two calls started has been recorded
+      sc.setLocalProperty(mark, "drain")
+      spark.range(1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(mark, null)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val started = jobs.asScala.toSeq
+    assert(started.nonEmpty, "the calls started no job")
+    val aqeOff = started.count(p =>
+      p.getProperty("spark.sql.adaptive.enabled") == "false")
+    assert(aqeOff == 0, s"$aqeOff of ${started.size} jobs ran with AQE off")
+  }
+
+  test("cutPartitioned under a reliable checkpoint dir returns the same " +
+      "rows and still declares hash partitioning and ordering") {
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    sc.setCheckpointDir(dir)
+    try {
+      val cp = graft.operators.Checkpointing.cutPartitioned(graph, "src")
+      cp.queryExecution.optimizedPlan match {
+        case l: LogicalRDD =>
+          assert(l.rdd.isCheckpointed && l.rdd.getCheckpointFile.isDefined,
+            "the artifact must be a reliable checkpoint")
+          assert(l.outputPartitioning.isInstanceOf[HashPartitioning],
+            s"captured ${l.outputPartitioning}")
+          assert(l.outputOrdering.nonEmpty, "sort order must be captured too")
+        case o => fail(s"cutPartitioned did not produce a LogicalRDD: ${o.getClass}")
+      }
+      assert(cp.exceptAll(graph).isEmpty && graph.exceptAll(cp).isEmpty)
+    } finally {
+      sc.setCheckpointDir(null)
+      graft.operators.Checkpointing.deleteRecursively(dir)
+    }
+    assert(sc.getCheckpointDir.isEmpty)
+  }
+
   test("BoundedPull returns the full artifact under the ceiling, trips " +
       "loudly above it, and never transfers more than ceiling+1 rows") {
     val small = spark.range(10).toDF("id")

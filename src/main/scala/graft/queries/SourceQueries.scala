@@ -80,7 +80,7 @@ object SourceQueries {
   private val txlogFollowMemo = new graft.operators.SessionMemo[String]
 
   /** The downstream table src_txlog_stream_v2 maintains by following
-    * the follow table AGAIN through the native V2 source→sink pair —
+    * the follow table AGAIN through the txlog source→sink connector —
     * one streaming run per (session, lake). */
   private val txlogV2FollowMemo = new graft.operators.SessionMemo[String]
 
@@ -1012,12 +1012,8 @@ object SourceQueries {
         val tmp = graft.streaming.StreamGate
           .sessionTempDir("graft-txlog-follow") { td =>
             val dtbl = s"$td/table"
-            // the short name routes the DSv2 MICRO_BATCH_READ path
-            // (r15 — VERDICT item 6): the V2 engine plans per-file
-            // reader partitions over the same changeDirs windows the
-            // V1 source resolves — this gate re-proves the whole
-            // composed loop through V2, hash-identical (the V1
-            // provider-class route stays spec'd in Round13OpsSpec)
+            // the short name and the provider-class route (spec'd in
+            // Round13OpsSpec) build the same TxLogStreamSource
             val q = s.readStream
               .format("txlog")
               .schema(StructType.fromDDL(sinkSchemaDdl))
@@ -1040,19 +1036,19 @@ object SourceQueries {
         .orderBy("event_type")
     }),
 
-    // V2 STREAMING BOTH DIRECTIONS (r15): a THIRD hop of the same feed
-    // — the stream_source follow table is itself followed into another
-    // TxLog table with readStream.format("txlog") →
-    // writeStream.format("txlog"), NO foreachBatch glue anywhere: the
-    // micro-batch source plans per-file readers over commit windows and
-    // the V2 sink's executors encode staged parquet the driver commits
-    // under producer-transaction idempotence (TxLog.commitStagedFiles —
-    // restart replay, zombie files, and interleaved-commit CAS spec'd
-    // in TxLogV2SinkSpec). The oracle is the stream_source oracle
-    // VERBATIM — after three hops (foreachBatch sink → V2 follow → V2
-    // native follow) the table must STILL equal the original events: a
-    // row dropped, duplicated, or corrupted by the native encode/decode
-    // anywhere flips the hash.
+    // STREAMING BOTH DIRECTIONS through the one TxLog connector: a
+    // THIRD hop of the same feed — the stream_source follow table is
+    // itself followed into another TxLog table with
+    // readStream.format("txlog") → writeStream.format("txlog"), NO
+    // foreachBatch glue anywhere: the V1 source plans each commit
+    // window as a parquet scan and the sink commits every micro-batch
+    // through TxLog.commitBatch under producer-transaction idempotence
+    // (restart replay, interleaved-commit CAS and the first-commit
+    // schema record spec'd in TxLogV2SinkSpec). The key keeps its r15
+    // name. The oracle is the stream_source oracle VERBATIM — after
+    // three hops (foreachBatch sink → follow → connector-only follow)
+    // the table must STILL equal the original events: a row dropped or
+    // duplicated anywhere flips the hash.
     "src_txlog_stream_v2" -> ((s, dir) => {
       // depends on the stream_source follow table: run that gate's
       // builder first (memoized — at most one streaming run per lake)
@@ -2566,7 +2562,7 @@ object SourceQueries {
         |FROM events
         |GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    // after the THIRD hop (native V2 source → native V2 sink) the
+    // after the THIRD hop (txlog source → txlog sink) the
     // table must still equal the original events — the stream_source
     // oracle verbatim, on purpose: the composed loop is the identity
     "src_txlog_stream_v2" ->

@@ -514,32 +514,40 @@ object TxLog {
     planParts(s, table, None)._2
       .find(_.txns.contains(appId -> batchId)).map(_.version)
 
-  /** The exactly-once foreachBatch SINK rule, in one place so the gate
-    * and the restart spec share it. Delivery bookkeeping is the
-    * PRODUCER-TRANSACTION record (`{"txn":appId,"v":batchId}` — the Delta
-    * SetTransaction idea), NOT the commit version: a batch whose batchId
-    * is at-or-below the appId's recorded watermark is a
-    * checkpoint-recovery replay and SKIPS (its data is durable — this is
-    * what turns at-least-once delivery into exactly-once table contents);
-    * otherwise the batch lands in an immutable data dir (overwrite
-    * absorbs a crash-partial dir from a previous attempt of this same
-    * batch) and commits at HEAD+1 carrying the txn record. Because the
-    * watermark is version-independent, maintenance commits — OPTIMIZE,
-    * vacuum bookkeeping, a second producer under its own appId — can
-    * interleave with a live sink without colliding with its batch
-    * numbering (a version=batchId scheme would read the first
-    * post-compaction batch as a replay of the compaction commit and wedge
-    * the stream; spec'd).
+  /** The exactly-once streaming SINK rule, in one place: the body of
+    * the `writeStream.format("txlog")` sink ([[TxLogSink]]) and of any
+    * `foreachBatch` that lands micro-batches in a TxLog table. Delivery
+    * bookkeeping is the PRODUCER-TRANSACTION record
+    * (`{"txn":appId,"v":batchId}` — the Delta SetTransaction idea), NOT
+    * the commit version: a batch whose batchId is at-or-below the appId's
+    * recorded watermark is a checkpoint-recovery replay and SKIPS (its
+    * data is durable — this is what turns at-least-once delivery into
+    * exactly-once table contents); otherwise the batch lands in an
+    * ATTEMPT dir `<name>/<uuid>` no other call shares and commits at
+    * HEAD+1 carrying the txn record. Because the watermark is
+    * version-independent, maintenance commits — OPTIMIZE, vacuum
+    * bookkeeping, a second producer under its own appId — can interleave
+    * with a live sink: a lost CAS re-plans, re-checks the watermark and
+    * retries at the new head (bounded at 64 attempts; an append has no
+    * read-set, so the retry is always safe). When the interleaved commit
+    * was this producer's own batch (a second driver delivering the same
+    * batch id), the re-check makes it a verified replay: this attempt's
+    * dir is deleted and the winner's bytes are never touched. A crash
+    * before the commit leaves an unreferenced attempt dir.
     *
     * The skip path still VERIFIES it is a replay, not a reuse: the commit
     * that recorded (appId, batchId) must name exactly this producer's
-    * data dir (`b%010d`). A fresh stream (new checkpoint, batch ids
-    * restarting at 0) pointed at a table some OTHER producer built under
-    * the SAME appId would otherwise read its foreign records as "already
-    * delivered" and silently drop every batch — the one quiet failure
-    * this file's every other path refuses. (Distinct producers use
-    * distinct appIds and simply append — the multi-producer contract.)
+    * data dir (`b%010d`, or `b-<appId>-%010d` for a named producer, with
+    * or without the attempt level — tables written before attempt dirs
+    * name the bare dir), or nothing (a recorded empty delivery). A fresh
+    * stream (new checkpoint, batch ids restarting at 0) pointed at a
+    * table some OTHER producer built under the SAME appId would otherwise
+    * read its foreign records as "already delivered" and silently drop
+    * every batch — the one quiet failure this file's every other path
+    * refuses. (Distinct producers use distinct appIds and simply append —
+    * the multi-producer contract.)
     *
+    * The first commit of a table records the batch's schema.
     * `statsCols` (optional) records per-dir min/max for those columns in
     * the commit — one bounded aggregate over the just-written dir
     * (footer-cheap on parquet) — so downstream reads can data-skip. */
@@ -554,29 +562,50 @@ object TxLog {
     val name =
       if (appId == "stream") f"b$batchId%010d" else f"b-$appId-$batchId%010d"
     val st = planState(s, table) // ONE checkpoint-accelerated walk
-    if (!verifiedReplay(st, table, appId, batchId, name,
-        emptyDelivery = false)) {
-      batch.write.mode("overwrite").parquet(s"$table/$name")
-      val (stats, nRows) =
-        statsAndRows(s.read.parquet(s"$table/$name"), statsCols)
+    if (verifiedReplay(st, table, appId, batchId, name)) return
+    val attempt = s"$name/${java.util.UUID.randomUUID()}"
+    batch.write.parquet(s"$table/$attempt")
+    val (stats, nRows) =
+      statsAndRows(s.read.parquet(s"$table/$attempt"), statsCols)
+    val add = AddFile(attempt, stats, rows = Some(nRows))
+    // Some(v): committed at v; None: another attempt delivered the batch
+    @scala.annotation.tailrec
+    def commit(st: PlanState, attempts: Int): Option[Long] = {
       val v = st.head.fold(0L)(_ + 1L)
-      require(tryCommitActions(s, table, v,
-          Seq(AddFile(name, stats, rows = Some(nRows))), Nil,
-          txns = Seq(appId -> batchId), cdf = Some("@adds")),
-        s"$table: version $v was committed by another writer while this " +
-          "batch wrote its data — two writers share one sink table; " +
-          "re-run the batch (the replay watermark makes the retry safe)")
-      maybeAutoCheckpoint(s, table, v)
+      if (tryCommitActions(s, table, v, Seq(add), Nil,
+          schemaDdl = if (st.head.isEmpty) Some(batch.schema.toDDL) else None,
+          txns = Seq(appId -> batchId), cdf = Some("@adds"))) Some(v)
+      else {
+        require(attempts + 1 < 64,
+          s"$table: lost the commit CAS ${attempts + 1} times delivering " +
+            s"'$appId' batch $batchId — a pathologically hot foreign " +
+            "writer; re-run the batch (the replay watermark makes the " +
+            "retry safe)")
+        val next = planState(s, table)
+        if (verifiedReplay(next, table, appId, batchId, name)) None
+        else commit(next, attempts + 1)
+      }
+    }
+    def dropAttempt(): Unit =
+      fsOf(s, new Path(table)).delete(new Path(table, attempt), true)
+    val committed =
+      try commit(st, 0)
+      catch { case e: IllegalArgumentException => dropAttempt(); throw e }
+    committed match {
+      case Some(v) => maybeAutoCheckpoint(s, table, v)
+      case None => dropAttempt()
     }
   }
 
-  /** The producer-transaction replay check of [[commitBatch]] and
-    * [[commitStagedFiles]]: true for a verified replay of batch `batchId`
-    * (data dir `name`), false for a fresh delivery whose dir is not live;
-    * loud otherwise. `emptyDelivery` accepts a recorded delivery with no
-    * adds (the streaming sink commits empty batches). */
+  /** The producer-transaction replay check of [[commitBatch]]: true for
+    * a verified replay of batch `batchId` (data dir `name`), false for a
+    * fresh delivery none of whose dirs is live; loud otherwise. */
   private def verifiedReplay(st: PlanState, table: String, appId: String,
-      batchId: Long, name: String, emptyDelivery: Boolean): Boolean =
+      batchId: Long, name: String): Boolean = {
+    // `name` itself (tables written before attempt dirs) or one attempt
+    // dir under it
+    def owned(add: String): Boolean = add == name ||
+      (add.startsWith(name + "/") && !add.substring(name.length + 1).contains('/'))
     st.txnWatermarks.get(appId) match {
       case Some(w) if w >= batchId =>
         // replay: verify the recording commit when it is still in the
@@ -585,13 +614,15 @@ object TxLog {
         // the delivery — and the recording commit may be truncated)
         st.suffix.find(_.txns.contains(appId -> batchId)) match {
           case Some(rec) =>
-            val expected =
-              if (emptyDelivery && rec.adds.isEmpty) Nil else Seq(name)
-            require(rec.adds.map(_.name) == expected,
+            // one dir of this producer's naming, or a recorded empty
+            // delivery (the adds-less commits of tables an earlier
+            // staged-file sink built)
+            require(rec.adds.isEmpty ||
+                (rec.adds.size == 1 && owned(rec.adds.head.name)),
               s"$table: '$appId' batch $batchId is recorded at " +
                 s"v${rec.version} with adds " +
                 s"[${rec.adds.map(_.name).mkString(",")}], not the expected " +
-                s"[${expected.mkString(",")}] — this table was not built " +
+                s"[$name] — this table was not built " +
                 "by this stream (a fresh checkpoint pointed at a foreign " +
                 "table under the same appId is a misconfiguration, not a " +
                 "replay)")
@@ -608,7 +639,7 @@ object TxLog {
             // appId fails here instead of silently dropping every batch.
             val rewritten = st.liveAdds.exists(a =>
               RewriteDirRe.matches(a.name))
-            require(rewritten || st.liveAdds.exists(_.name == name),
+            require(rewritten || st.liveAdds.exists(a => owned(a.name)),
               s"$table: '$appId' claims batch $batchId is delivered " +
                 "(checkpoint-subsumed record) but the snapshot's live set " +
                 s"carries neither $name nor any compaction rewrite — a " +
@@ -617,13 +648,13 @@ object TxLog {
         }
         true
       case _ =>
-        // NOT delivered by this producer — but the target dir must not be
+        // NOT delivered by this producer — but none of its dirs may be
         // LIVE: a live dir of this name means a producer that records no
         // transactions (a pre-txn table) or a foreign producer sharing
-        // the naming delivered it, and writing it again would destroy
-        // live data and publish a duplicate add (corrupting the log).
-        // Loud instead — migration/misconfiguration, not a replay.
-        require(!st.liveAdds.exists(_.name == name),
+        // the naming delivered it, and delivering it again would publish
+        // a duplicate of live data. Loud instead —
+        // migration/misconfiguration, not a replay.
+        require(!st.liveAdds.exists(a => owned(a.name)),
           s"$table: data dir $name is already LIVE but '$appId' has no " +
             s"delivery record for batch $batchId — this table was written " +
             "by a producer that does not record transactions, or a " +
@@ -631,69 +662,6 @@ object TxLog {
             "live data")
         false
     }
-
-  /** [[commitBatch]]'s contract over files ALREADY WRITTEN by executors
-    * (r15 — the DSv2 STREAMING SINK's commit leg): same producer-
-    * transaction idempotence, same foreign-table guards, but the batch
-    * arrives as staged part files (each task wrote its own under the
-    * sink's private dot-dir) instead of a DataFrame to re-write. On a
-    * fresh delivery the staged files are renamed into the producer's
-    * versioned data dir (`b-<appId>-<batchId>`), stats/rows are taken
-    * from a read-back of exactly those bytes, and the commit carries the
-    * txn record + `@adds` feed; the CAS retries against interleaved
-    * FOREIGN commits (OPTIMIZE, a second producer — an append has no
-    * read-set, and the replay watermark re-checked each attempt keeps a
-    * same-appId race loud). A REPLAYED delivery (watermark at-or-above
-    * `batchId`) verifies the recording commit exactly like
-    * [[commitBatch]] and returns false — the caller deletes its staged
-    * bytes. An EMPTY delivery still commits (adds = ∅, txn recorded) so
-    * the watermark advances and a restart can recognize the replay. */
-  private[sources] def commitStagedFiles(s: SparkSession, table: String,
-      stagedFiles: Seq[Path], batchId: Long, appId: String,
-      statsCols: Seq[String], schemaDdl: Option[String]): Boolean = {
-    require(appId.matches("""[A-Za-z0-9._-]+"""),
-      s"appId '$appId' must be a plain path-safe token (it names data dirs)")
-    val name = f"b-$appId-$batchId%010d"
-    var attempts = 0
-    while (true) {
-      val st = planState(s, table) // ONE checkpoint-accelerated walk
-      if (verifiedReplay(st, table, appId, batchId, name,
-          emptyDelivery = true)) return false
-      val v = st.head.fold(0L)(_ + 1L)
-      val ddl = if (st.schemaDdl.isEmpty) schemaDdl else None
-      val adds =
-        if (stagedFiles.isEmpty) Nil
-        else {
-          val f = fsOf(s, new Path(table))
-          val dst = new Path(table, name)
-          // first attempt moves the bytes; a CAS retry reuses them
-          if (!f.exists(dst)) {
-            require(f.mkdirs(dst), s"$table: cannot create $dst")
-            stagedFiles.foreach(p =>
-              require(f.rename(p, new Path(dst, p.getName)),
-                s"$table: cannot move staged $p into $dst"))
-          }
-          val (stats, nRows) =
-            statsAndRows(s.read.parquet(s"$table/$name"), statsCols)
-          Seq(AddFile(name, stats, rows = Some(nRows)))
-        }
-      val committed = tryCommitActions(s, table, v, adds, Nil,
-        schemaDdl = ddl, txns = Seq(appId -> batchId),
-        cdf = Some("@adds"))
-      if (committed) {
-        maybeAutoCheckpoint(s, table, v)
-        return true
-      }
-      attempts += 1
-      require(attempts < 64,
-        s"$table: lost the commit CAS $attempts times delivering " +
-          s"'$appId' batch $batchId — a pathologically hot foreign " +
-          "writer; re-run the batch")
-      // loop: re-plan — the interleaved commit may itself have been
-      // this producer's (a zombie driver); the watermark re-check
-      // above turns that into a verified replay, never a double add
-    }
-    false // unreachable
   }
 
   /** WRITE–AUDIT–PUBLISH (r13 — the Iceberg WAP idea): stage `df` as an
@@ -1665,7 +1633,9 @@ object TxLog {
   /** INCREMENTAL CHANGE READ (the change-data-feed consumer contract on
     * an APPEND-ONLY table): the rows committed in versions
     * (`fromVersion`, `toVersion`] — exactly the data dirs those commits
-    * added, as one plain parquet scan. Stitched incremental reads
+    * added, as one plain parquet scan (an empty window reads as an
+    * empty local relation, which the stream source can tag as
+    * streaming). Stitched incremental reads
     * reconstruct the full table: changes(−1, v1] ∪ changes(v1, head] ≡
     * read(head). LOUD when the range contains a REMOVE (an OPTIMIZE /
     * merge rewrote files inside the window): a rewrite is layout, not new
@@ -1675,15 +1645,13 @@ object TxLog {
       fromVersion: Long, toVersion: Long): DataFrame = {
     val dirs = changeDirs(s, table, fromVersion, toVersion)
     if (dirs.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+      s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     else s.read.schema(schema).parquet(dirs.map(d => s"$table/$d"): _*)
   }
 
   /** The data dirs the commits in (`fromVersion`, `toVersion`] added —
-    * [[readChanges]]'s window resolution, shared with the DSv2
-    * micro-batch stream (which plans its own per-file readers over
-    * exactly these dirs, so the V1 and V2 streaming paths CANNOT
-    * drift). */
+    * [[readChanges]]'s window resolution, and through it every batch of
+    * the TxLog stream source ([[TxLogStreamSource]]). */
   private[sources] def changeDirs(s: SparkSession, table: String,
       fromVersion: Long, toVersion: Long): Seq[String] = {
     require(fromVersion >= -1L,

@@ -48,17 +48,19 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * merges run through the Scala [[TxLogMerge.merge]] verb; the SQL
   * surface covers read/time-travel/create/insert. */
 class TxLogDataSource extends TableProvider with DataSourceRegister
-    with org.apache.spark.sql.sources.StreamSourceProvider {
+    with org.apache.spark.sql.sources.StreamSourceProvider
+    with StreamSinkProvider {
 
   override def shortName(): String = "txlog"
 
   override def supportsExternalMetadata(): Boolean = true
 
-  // `spark.readStream.format("txlog")` — the V1 streaming source
-  // (offsets = commit versions / change feeds) under the same short
-  // name; Spark routes streaming reads through StreamSourceProvider
-  // and batch reads through TableProvider, so one registration serves
-  // both directions of the front door.
+  // `readStream.format("txlog")` / `writeStream.format("txlog")` — the
+  // one streaming connector (sources/TxLogStream.scala). The table
+  // declares no streaming capability, so Spark routes streaming reads
+  // through StreamSourceProvider and streaming writes through
+  // StreamSinkProvider, and batch reads/writes through TableProvider:
+  // one registration serves every direction of the front door.
   private val streamProvider = new TxLogStreamSourceProvider
 
   override def sourceSchema(ctx: org.apache.spark.sql.SQLContext,
@@ -74,6 +76,25 @@ class TxLogDataSource extends TableProvider with DataSourceRegister
     streamProvider.createSource(ctx, metadataPath, schema, providerName,
       parameters)
 
+  override def createSink(ctx: SQLContext, parameters: Map[String, String],
+      partitionColumns: Seq[String],
+      outputMode: org.apache.spark.sql.streaming.OutputMode)
+      : org.apache.spark.sql.execution.streaming.Sink = {
+    val table = parameters.getOrElse("path",
+      throw new IllegalArgumentException(
+        "txlog stream sink needs .option(\"path\", <table dir>)"))
+    require(outputMode == org.apache.spark.sql.streaming.OutputMode.Append(),
+      s"$table: the txlog sink appends each micro-batch as a commit; " +
+        s"$outputMode output mode is not offered — write through " +
+        "foreachBatch (e.g. a TxLogMerge.merge per batch) instead")
+    require(!parameters.contains("versionAsOf") &&
+        !parameters.contains("timestampAsOf"),
+      s"$table: cannot stream into a time-travel snapshot")
+    new TxLogSink(table, parameters.get("appId"),
+      parameters.get("statsCols").toSeq
+        .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty))
+  }
+
   private def pathOf(m: util.Map[String, String]): String = {
     val p = Option(m.get("path")).orElse(Option(m.get("paths")))
     p.getOrElse(throw new IllegalArgumentException(
@@ -84,10 +105,11 @@ class TxLogDataSource extends TableProvider with DataSourceRegister
     val s = SparkSession.active
     val table = pathOf(options)
     // a table with no log yet has no schema to infer — the STREAMING
-    // SINK's first commit will record the query's schema (r15), so a
-    // not-yet-born target resolves to the empty struct instead of
-    // failing the write before it can create the table; a READ of it
-    // still fails loudly downstream (not a TxLog table)
+    // SINK's first commit will record the query's schema, and
+    // `writeStream` resolves the table before it falls back to the V1
+    // sink, so a not-yet-born target resolves to the empty struct
+    // instead of failing the write before it can create the table; a
+    // READ of it still fails loudly downstream (not a TxLog table)
     if (TxLog.currentVersion(s, table).isEmpty) new StructType()
     else TxLog.logSchema(s, table,
         TxLogDataSource.asOfVersion(s, table, options))
@@ -141,20 +163,16 @@ class TxLogTable(val table: String, tableSchema: StructType,
   override def name(): String =
     asOf.fold(s"txlog:$table")(v => s"txlog:$table@v$v")
 
-  // the streaming progress' sink description is this toString
   override def toString: String = name()
 
   override def schema(): StructType = tableSchema
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ,
-      TableCapability.V1_BATCH_WRITE,
-      TableCapability.STREAMING_WRITE)
+      TableCapability.V1_BATCH_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new TxLogScanBuilder(SparkSession.active, table, tableSchema, asOf,
-      options)
+    new TxLogScanBuilder(SparkSession.active, table, tableSchema, asOf)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
@@ -188,20 +206,6 @@ class TxLogTable(val table: String, tableSchema: StructType,
             }
           }
 
-        /** `writeStream.format("txlog")` (r15) — the exactly-once V2
-          * streaming sink; `appId` defaults to the query's durable id
-          * so one checkpoint = one producer identity. */
-        override def toStreaming
-            : org.apache.spark.sql.connector.write.streaming
-              .StreamingWrite = {
-          require(asOf.isEmpty,
-            s"$table: cannot stream into a time-travel snapshot")
-          val o = info.options()
-          new TxLogStreamingWrite(table, info.schema(),
-            Option(o.get("appId")).getOrElse(s"sw-${info.queryId()}"),
-            Option(o.get("statsCols")).toSeq
-              .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty))
-        }
       }
     }
 }
@@ -223,9 +227,7 @@ object TxLogScanTelemetry {
   * row-level): envelope pruning is file-granular, so the scan only ever
   * drops whole files the filter provably rejects — never rows. */
 class TxLogScanBuilder(s: SparkSession, table: String, full: StructType,
-    asOf: Option[Long],
-    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
-    extends ScanBuilder
+    asOf: Option[Long]) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
@@ -379,8 +381,7 @@ class TxLogScanBuilder(s: SparkSession, table: String, full: StructType,
 
   override def build(): Scan = pushedCount match {
     case Some(n) => new TxLogCountScan(table, n)
-    case None => new TxLogScan(s, table, full, required, skips, asOf,
-      options)
+    case None => new TxLogScan(s, table, full, required, skips, asOf)
   }
 }
 
@@ -413,44 +414,10 @@ class TxLogCountScan(table: String, n: Long) extends V1Scan {
   * (kept, total) counts, and execution bridges to the batch read of
   * exactly the surviving dirs via [[V1Scan]]. */
 class TxLogScan(s: SparkSession, table: String, full: StructType,
-    required: StructType, skips: Seq[TxLog.Skip], asOf: Option[Long],
-    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+    required: StructType, skips: Seq[TxLog.Skip], asOf: Option[Long])
     extends V1Scan {
 
   override def readSchema(): StructType = required
-
-  /** `readStream.format("txlog")` (r15 — VERDICT item 6): the V2
-    * micro-batch engine asks the scan for its stream — offsets =
-    * commit versions over the same changeDirs window resolution as the
-    * V1 source, paced by `maxVersionsPerTrigger`, started at
-    * `startVersion` (default −1: initial load delivers everything) or
-    * `startTimestamp` (deliver every commit whose durable instant is
-    * at-or-after it — the Delta startingTimestamp idea, same clock as
-    * timestampAsOf). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    require(asOf.isEmpty,
-      s"$table: cannot stream a time-travel snapshot (versionAsOf)")
-    require(!Option(options.get("feed")).contains("cdf"),
-      s"$table: the cdf feed streams through the V1 source " +
-        "(graft.sources.TxLogStreamSourceProvider) — the V2 path " +
-        "serves the file feed")
-    val startTs = Option(options.get("startTimestamp"))
-      .map(TxLogDataSource.parseTsMillis)
-    require(startTs.isEmpty || options.get("startVersion") == null,
-      s"$table: startVersion and startTimestamp are mutually exclusive")
-    val startVersion = Option(options.get("startVersion")).map(_.toLong)
-      .orElse(startTs.map { ts =>
-        // start offset = the snapshot strictly BEFORE the instant, so
-        // every commit at-or-after it is delivered; an instant before
-        // the whole surviving history starts at −1 (deliver everything)
-        try TxLog.versionAtTimestamp(s, table, ts - 1L)
-        catch { case _: IllegalArgumentException => -1L }
-      }).getOrElse(-1L)
-    new TxLogMicroBatchStream(table, full,
-      Option(options.get("maxVersionsPerTrigger")).map(_.toLong),
-      startVersion)
-  }
 
   override def description(): String = {
     val (kept, total) = plannedCounts

@@ -10,18 +10,22 @@ import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.StructType
 
-/** The one Spark-internal seam the V1 streaming-source contract needs
-  * (the standard extension-library shim, in a sibling package of
-  * `org.apache.spark.sql` because `Dataset.ofRows` is private[sql]):
-  * MicroBatchExecution ASSERTS that a V1 `Source.getBatch` result has
-  * `isStreaming = true` on its leaves, and Spark's own FileStreamSource
-  * satisfies it exactly this way — re-tagging the batch-planned
-  * `LogicalRelation` as streaming (FileStreamSource.getBatch builds
-  * `LogicalRelation(relation, isStreaming = true)`). Nothing about the
-  * scan changes: same files, same pushdown, same codegen — only the
-  * plan's streaming bit, which is what lets the incremental parquet
-  * scan ride inside a streaming query plan. The seam also serves the MERGE
-  * interception and `Checkpointing.cutPartitioned`. */
+/** The Spark-internal seam graft's connectors need (the standard
+  * extension-library shim, in a sibling package of `org.apache.spark.sql`
+  * because `Dataset.ofRows` and `LogicalRDD` are private[sql]). Each move
+  * is one Spark's own connectors make:
+  *  - the TxLog stream SOURCE: MicroBatchExecution ASSERTS that a V1
+  *    `Source.getBatch` result has `isStreaming = true` on its leaves,
+  *    and Spark's FileStreamSource satisfies it by re-tagging the
+  *    batch-planned `LogicalRelation` as streaming ([[asStreaming]],
+  *    [[emptyStreaming]]). Nothing about the scan changes: same files,
+  *    same pushdown, same codegen — only the plan's streaming bit;
+  *  - the TxLog stream SINK: a V1 `Sink.addBatch` receives the
+  *    incremental execution, which batch writers cannot re-plan;
+  *    ForeachBatchSink hands its callback a `LogicalRDD` over the
+  *    executed rows instead ([[batchOf]]);
+  *  - the SQL MERGE interception ([[dfOf]], [[columnOf]]) and
+  *    `Checkpointing.cutPartitioned` ([[rowsOf]], [[checkpointNow]]). */
 object StreamingBridge {
 
   /** Re-tag `df`'s leaf relations as streaming — the FileStreamSource
@@ -41,6 +45,16 @@ object StreamingBridge {
       s"cannot tag plan as streaming — no LogicalRelation/LocalRelation " +
         s"leaf in:\n${cds.queryExecution.analyzed}")
     ClassicDataset.ofRows(cds.sparkSession, plan)
+  }
+
+  /** A plain batch frame over a micro-batch's incremental execution —
+    * the ForeachBatchSink move: the rows of `data.queryExecution.toRdd`
+    * under a `LogicalRDD`, so batch writers plan over it like any frame
+    * and the batch is evaluated once. */
+  def batchOf(data: DataFrame): DataFrame = {
+    val cds = data.asInstanceOf[ClassicDataset[Row]]
+    dfOf(cds.sparkSession, LogicalRDD.fromDataset(
+      cds.queryExecution.toRdd, cds, isStreaming = false))
   }
 
   /** A batch DataFrame over an analyzed logical plan — the

@@ -29,6 +29,7 @@ class Round16OpsSpec extends AnyFunSuite with SparkTestBase {
             "layouts through AQE cuts and cutPartitioned can be simplified")
       case o => fail(s"cut did not produce a LogicalRDD: ${o.getClass}")
     }
+    val aqeBefore = spark.conf.getOption("spark.sql.adaptive.enabled")
     val cp = graft.operators.Checkpointing.cutPartitioned(graph, "src")
     cp.queryExecution.optimizedPlan match {
       case l: LogicalRDD =>
@@ -37,9 +38,8 @@ class Round16OpsSpec extends AnyFunSuite with SparkTestBase {
         assert(l.outputOrdering.nonEmpty, "sort order must be captured too")
       case o => fail(s"cutPartitioned did not produce a LogicalRDD: ${o.getClass}")
     }
-    // AQE must be restored after the relayout window
-    assert(spark.conf.get("spark.sql.adaptive.enabled") != "false" ||
-      !spark.conf.getOption("spark.sql.adaptive.enabled").contains("false"))
+    // the session's AQE setting is the caller's: left exactly as it was
+    assert(spark.conf.getOption("spark.sql.adaptive.enabled") == aqeBefore)
   }
 
   test("cutPartitioned is result-identical to the plain frame") {
@@ -53,7 +53,8 @@ class Round16OpsSpec extends AnyFunSuite with SparkTestBase {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       // floorParallelism → n >= spark.sql.shuffle.partitions, which is the
-      // measured reuse threshold on Spark 4.1.2 (CutPartExperiment)
+      // measured reuse threshold on Spark 4.1.2 (see the consumer-side
+      // reuse rules in Checkpointing.cutPartitioned's Scaladoc)
       val cp = graft.operators.Checkpointing.cutPartitioned(
         graph, floorParallelism = true, "src")
       val labels = spark.range(100)

@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions.col
 
-/** The DSv2 streaming SINK (r15) — `writeStream.format("txlog")` rides
-  * the native V2 write path exactly-once — and TIMESTAMP time travel
-  * (versionAtTimestamp / `timestampAsOf` / SQL `TIMESTAMP AS OF`). */
+/** The TxLog streaming SINK — `writeStream.format("txlog")` commits each
+  * micro-batch exactly once through `TxLog.commitBatch` — and TIMESTAMP
+  * time travel (versionAtTimestamp / `timestampAsOf` / SQL
+  * `TIMESTAMP AS OF`). */
 class TxLogV2SinkSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
   import graft.sources.TxLog
@@ -52,14 +53,18 @@ class TxLogV2SinkSpec extends AnyFunSuite with SparkTestBase {
       s"statsCols must record x envelopes, got ${st.liveAdds}")
     assert(st.schemaDdl.contains(xySchema.toDDL),
       "the first commit must record the schema")
-    // staging swept: no .swstage epoch dirs survive the drained stream
+    // no unreferenced attempt dir survives the drained stream: every
+    // <batch dir>/<attempt> under the table is a live add
     val f = new org.apache.hadoop.fs.Path(down).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val leftover = f.listStatus(new org.apache.hadoop.fs.Path(down))
-      .map(_.getPath.getName).filter(_.startsWith(".swstage"))
-      .flatMap(d => f.listStatus(
-        new org.apache.hadoop.fs.Path(down, d)).map(_.getPath.getName))
-    assert(leftover.isEmpty, s"staging not swept: ${leftover.toSeq}")
+    val attemptDirs = f.listStatus(new org.apache.hadoop.fs.Path(down))
+      .filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith("b"))
+      .flatMap(d => f.listStatus(new org.apache.hadoop.fs.Path(down, d))
+        .filter(_.isDirectory).map(c => s"$d/${c.getPath.getName}"))
+    val live = st.liveAdds.map(_.name).toSet
+    assert(attemptDirs.nonEmpty && attemptDirs.forall(live),
+      s"unreferenced attempt dirs: ${attemptDirs.filterNot(live).toSeq}")
     graft.operators.Checkpointing.deleteRecursively(td)
   }
 
@@ -117,22 +122,34 @@ class TxLogV2SinkSpec extends AnyFunSuite with SparkTestBase {
     graft.operators.Checkpointing.deleteRecursively(td)
   }
 
-  test("loud boundaries: nested column types and complete output mode " +
-      "refuse the V2 sink with the foreachBatch remedy") {
+  test("an ARRAY<BIGINT> column streams into the sink and reads back " +
+      "intact; complete output mode is loud with the foreachBatch remedy") {
     val up = freshTable()
     val arrSchema = StructType.fromDDL("x BIGINT, a ARRAY<BIGINT>")
-    Seq((1L, Seq(1L))).toDF("x", "a").write.parquet(s"$up/d0")
+    Seq((1L, Seq(1L)), (2L, Seq(2L, 3L))).toDF("x", "a")
+      .write.parquet(s"$up/d0")
     assert(TxLog.tryCommitActions(spark, up, 0L, Seq(TxLog.AddFile("d0")),
       Nil, schemaDdl = Some(arrSchema.toDDL), cdf = Some("@adds")))
+    val down = freshTable()
     val td = java.nio.file.Files.createTempDirectory("v2w4").toString
+    val q = spark.readStream
+      .format(classOf[graft.sources.TxLogStreamSourceProvider].getName)
+      .schema(arrSchema).option("path", up).load()
+      .writeStream.format("txlog")
+      .option("path", down)
+      .option("checkpointLocation", s"$td/ckpt").start()
+    try q.processAllAvailable() finally q.stop()
+    val got = TxLog.read(spark, down, arrSchema).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
+    assert(got == Seq((1L, Seq(1L)), (2L, Seq(2L, 3L))), s"got $got")
     val e = intercept[Exception] {
-      val q = spark.readStream
-        .format(classOf[graft.sources.TxLogStreamSourceProvider].getName)
+      val q2 = spark.readStream.format("txlog")
         .schema(arrSchema).option("path", up).load()
-        .writeStream.format("txlog")
+        .groupBy("x").count()
+        .writeStream.format("txlog").outputMode("complete")
         .option("path", freshTable())
-        .option("checkpointLocation", s"$td/ckpt").start()
-      try q.processAllAvailable() finally q.stop()
+        .option("checkpointLocation", s"$td/ckpt2").start()
+      try q2.processAllAvailable() finally q2.stop()
     }
     assert(e.getMessage.contains("foreachBatch") ||
       Option(e.getCause).exists(_.getMessage.contains("foreachBatch")),

@@ -301,6 +301,40 @@ class TxLogV2Spec extends AnyFunSuite with SparkTestBase {
       == Seq(1L))
   }
 
+  test("commitBatch: two drivers racing one batch id — exactly one " +
+      "version commits, the loser deletes its attempt dir and returns as " +
+      "a verified replay, and the table holds exactly the winner's rows") {
+    val t = freshTable()
+    TxLog.commitBatch(Seq((0L, 0L)).toDF("x", "y"), t, 0L, appId = "race")
+    val sides = Seq((1L to 20L).map(x => (x, 1L)), (21L to 40L).map(x => (x, 2L)))
+    // each side's write waits for the other's: both drivers have planned
+    // against the same head before either writes or commits
+    val meet = udf((x: Long, side: Int) => { MaterializeRace.meet(side); x })
+      .asNondeterministic()
+    def batch(i: Int) = sides(i).toDF("x", "y").coalesce(1)
+      .withColumn("x", meet(col("x"), lit(i)))
+    MaterializeRace.reset()
+    val outcomes = new Array[scala.util.Try[Unit]](2)
+    val threads = sides.indices.map(i => new Thread(() =>
+      outcomes(i) = scala.util.Try(
+        TxLog.commitBatch(batch(i), t, 1L, appId = "race"))))
+    threads.foreach(_.start()); threads.foreach(_.join(120000))
+    assert(!MaterializeRace.missed, "the writers never overlapped")
+    assert(outcomes.forall(_.isSuccess), s"both calls deliver: ${outcomes.toSeq}")
+    assert(TxLog.currentVersion(spark, t).contains(1L),
+      "exactly one version commits")
+    val rows = TxLog.read(spark, t, xySchema).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val won = sides.indices.filter(i => rows == ((0L, 0L) +: sides(i)).toSet)
+    assert(won.size == 1, s"the table must hold exactly one side's rows: $rows")
+    // the loser's attempt dir is gone: the batch dir holds the one live attempt
+    val attempts = new java.io.File(s"$t/b-race-0000000001").list().toSeq
+    val live = TxLog.liveAdds(spark, t).map(_.name)
+    assert(attempts.map(a => s"b-race-0000000001/$a") ==
+      live.filter(_.startsWith("b-race-0000000001")),
+      s"attempt dirs $attempts, live adds $live")
+  }
+
   test("full pre-checkpoint truncation: the checkpoint IS the head — " +
       "reads, new batches, and subsumed replays all keep working") {
     val t = freshTable()
@@ -626,7 +660,7 @@ class TxLogV2Spec extends AnyFunSuite with SparkTestBase {
   }
 }
 
-/** Rendezvous for the two-writer race: each side marks its arrival, then
+/** Rendezvous for the two-writer races: each side marks its arrival, then
   * waits for the other. Static, so Spark tasks reach it without closure
   * capture (local mode: one JVM). */
 object MaterializeRace {

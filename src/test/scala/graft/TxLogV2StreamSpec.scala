@@ -4,10 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 
-/** The DSv2 micro-batch stream (r15 — VERDICT item 6): the short name
-  * routes MICRO_BATCH_READ (no graftshim re-tag), offsets are commit
-  * versions, pacing rides admission control, restart recovers from the
-  * offset log exactly once, and unsupported shapes are loud. */
+/** The TxLog stream source through the short name: offsets are commit
+  * versions, `maxVersionsPerTrigger` paces, restart recovers from the
+  * offset log exactly once, start pins (`startVersion`,
+  * `startTimestamp`) hold on both routes, and every column type and the
+  * cdf feed stream. */
 class TxLogV2StreamSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
   import graft.sources.TxLog
@@ -25,9 +26,9 @@ class TxLogV2StreamSpec extends AnyFunSuite with SparkTestBase {
       cdf = Some("@adds")))
   }
 
-  test("format(\"txlog\") streams through the V2 engine (the source " +
-      "description is the MicroBatchStream, not the V1 re-tag), one " +
-      "commit per trigger under maxVersionsPerTrigger") {
+  test("format(\"txlog\") streams through the one TxLog connector (the " +
+      "source description is the TxLogStreamSource), one commit per " +
+      "trigger under maxVersionsPerTrigger") {
     val t = freshTable()
     (0 to 3).foreach(v => commitRange(t, v, v * 10L, v * 10L + 10L))
     val td = java.nio.file.Files.createTempDirectory("v2s1").toString
@@ -41,8 +42,9 @@ class TxLogV2StreamSpec extends AnyFunSuite with SparkTestBase {
       }.start()
     try q.processAllAvailable() finally q.stop()
     assert(q.lastProgress.sources.head.description
-      .contains("TxLogMicroBatchStream"),
-      s"the short name must route V2: ${q.lastProgress.sources.head}")
+      .contains("TxLogStreamSource"),
+      s"the short name must build the TxLog source: " +
+        s"${q.lastProgress.sources.head}")
     assert(batchSizes.filter(_ > 0) == Seq(10L, 10L, 10L, 10L),
       s"one commit per trigger, got $batchSizes")
     graft.operators.Checkpointing.deleteRecursively(td)
@@ -139,33 +141,67 @@ class TxLogV2StreamSpec extends AnyFunSuite with SparkTestBase {
       s"got $e")
   }
 
-  test("loud boundaries: cdf feed and unsupported column types refuse " +
-      "the V2 path with the V1 remedy") {
+  test("the short name streams the cdf feed and nested column types: " +
+      "feed=cdf follows (startVersion, head], an ARRAY<BIGINT> column " +
+      "arrives intact") {
     val t = freshTable()
     commitRange(t, 0L, 0L, 5L)
-    val e = intercept[Exception] {
-      val q = spark.readStream.format("txlog")
-        .schema(xySchema).option("path", t).option("feed", "cdf").load()
-        .writeStream.format("noop").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    assert(e.getMessage.contains("V1 source") ||
-      Option(e.getCause).exists(_.getMessage.contains("V1 source")),
-      s"got $e")
+    commitRange(t, 1L, 5L, 8L)
+    val td = java.nio.file.Files.createTempDirectory("v2cdf").toString
+    val cdfRows = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, Long, String)]
+    val q = spark.readStream.format("txlog")
+      .schema(xySchema).option("path", t).option("feed", "cdf").load()
+      .writeStream.option("checkpointLocation", s"$td/cdf")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        cdfRows ++= b.select("x", "_version", "_change_type").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getString(2))); ()
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    assert(cdfRows.sorted.toSeq == (5L until 8L).map(x => (x, 1L, "insert")),
+      s"the default cdf start is v0: v1's adds as inserts, got $cdfRows")
     val tArr = freshTable()
     val arrSchema = StructType.fromDDL("x BIGINT, a ARRAY<BIGINT>")
     Seq((1L, Seq(1L, 2L))).toDF("x", "a").write.parquet(s"$tArr/d0")
     assert(TxLog.tryCommitActions(spark, tArr, 0L,
       Seq(TxLog.AddFile("d0")), Nil,
       schemaDdl = Some(arrSchema.toDDL), cdf = Some("@adds")))
-    val e2 = intercept[Exception] {
-      val q = spark.readStream.format("txlog")
-        .schema(arrSchema).option("path", tArr).load()
-        .writeStream.format("noop").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    assert(e2.getMessage.contains("V1 source") ||
-      Option(e2.getCause).exists(_.getMessage.contains("V1 source")),
-      s"got $e2")
+    val arrRows = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, Seq[Long])]
+    val q2 = spark.readStream.format("txlog")
+      .schema(arrSchema).option("path", tArr).load()
+      .writeStream.option("checkpointLocation", s"$td/arr")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        arrRows ++= b.collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
+        ()
+      }.start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(arrRows.toSeq == Seq((1L, Seq(1L, 2L))), s"got $arrRows")
+    graft.operators.Checkpointing.deleteRecursively(td)
+  }
+
+  test("the provider-class route honours startVersion on the file feed " +
+      "and streams past an adds-less commit: startVersion=1 delivers only " +
+      "the commits after v1") {
+    val t = freshTable()
+    (0 to 3).foreach(v => commitRange(t, v, v * 10L, v * 10L + 10L))
+    // v4 records a schema and adds nothing: its window is empty
+    assert(TxLog.tryCommitActions(spark, t, 4L, Nil, Nil,
+      schemaDdl = Some(xySchema.toDDL), cdf = Some("@adds")))
+    commitRange(t, 5L, 50L, 60L)
+    val td = java.nio.file.Files.createTempDirectory("v2sv").toString
+    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val q = spark.readStream
+      .format(classOf[graft.sources.TxLogStreamSourceProvider].getName)
+      .schema(xySchema).option("path", t).option("startVersion", "1")
+      .option("maxVersionsPerTrigger", "1").load()
+      .writeStream.option("checkpointLocation", s"$td/ckpt")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        got ++= b.collect().map(_.getLong(0)); ()
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    assert(got.sorted.toSeq == (20L until 40L) ++ (50L until 60L),
+      s"only v2, v3 and v5 follow startVersion=1, got ${got.sorted}")
+    graft.operators.Checkpointing.deleteRecursively(td)
   }
 }

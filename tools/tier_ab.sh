@@ -13,11 +13,14 @@
 # KEYs are TimeMany name prefixes. REPS must be >= 2 for a warm time.
 # SPARK_GRAFT_CPUS (default: nproc) sets the local session's cores; sbt
 # runs with the caller's SBT_OPTS. The temp dir is made under $TMPDIR
-# (default /tmp) and removed on exit, worktrees included. Each side
-# compiles its own checkout on its first round (outside the timed region).
+# (default /tmp) and removed on exit, worktrees included; the per-round
+# timings are first kept as target/tier_ab/<parent>-<change>-<UTC stamp>.txt
+# (short SHAs; lines "side round rep key secs"), the path printed on
+# stderr, so a verdict can be re-examined. Each side compiles its own
+# checkout on its first round (outside the timed region).
 set -euo pipefail
 if [ $# -ne 6 ]; then
-  sed -n '2,18p' "$0" >&2
+  sed -n '2,20p' "$0" >&2
   exit 2
 fi
 parent=$1 change=$2 sf=$3 reps=$4 rounds=$5 keys=$6
@@ -53,7 +56,12 @@ for round in $(seq 1 "$rounds"); do
   done
 done
 
-python3 - "$work/times.txt" "$rounds" "$reps" <<'EOF'
+kept="$repo/target/tier_ab/$(git -C "$repo" rev-parse --short "$parent")-$(git -C "$repo" rev-parse --short "$change")-$(date -u +%Y%m%dT%H%M%SZ).txt"
+mkdir -p "$(dirname "$kept")"
+cp "$work/times.txt" "$kept"
+echo "[tier_ab] per-round timings kept in $kept" >&2
+
+python3 - "$kept" "$rounds" "$reps" <<'EOF'
 import collections, statistics, sys
 
 rounds, reps = int(sys.argv[2]), int(sys.argv[3])

@@ -315,7 +315,7 @@ object SourceQueries {
             "rename must commit v1")
           // v2: mapped append of shifted ≡0-mod-13 rows under the NEW
           // logical name — the staged parquet stores physical n_chars
-          require(TxLog.appendMapped(
+          require(TxLog.append(
               docs.filter(pmod(col("doc_id"), lit(13)) === 0)
                 .select((col("doc_id") + off).as("doc_id"), col("lang"),
                   col("source"), col("n_chars").as("chars")),
@@ -329,7 +329,7 @@ object SourceQueries {
             "re-add must commit v4")
           // v5: mapped append of shifted ≡0-mod-17 rows CARRYING the
           // reborn lang
-          require(TxLog.appendMapped(
+          require(TxLog.append(
               docs.filter(pmod(col("doc_id"), lit(17)) === 0)
                 .select((col("doc_id") + lit(2L) * off).as("doc_id"),
                   col("source"), col("n_chars").as("chars"), col("lang")),
@@ -1407,9 +1407,9 @@ object SourceQueries {
     // correctly under the new name, zero rewrite), a DROP hides bytes
     // without rewrite, a re-ADD of a dropped name mints a FRESH
     // physical identity (old bytes can never leak into the reborn
-    // column), mapped appends write physical names so the file history
-    // stays coherent, and every snapshot reads under its own map
-    // (readWithLogSchema posture, map-resolved). Spec'd in
+    // column), appends stage physical names so the file history stays
+    // coherent, and every snapshot reads under its own map (the plain
+    // append and readWithLogSchema resolve it). Spec'd in
     // TxLogColumnMapSpec (incl. map-aware OPTIMIZE shedding dropped
     // bytes, checkpointed maps, logical-name skip bounds, loud
     // boundaries). Gate: rename → mapped append → drop → re-add →
@@ -1428,10 +1428,10 @@ object SourceQueries {
               f(col("chars"))))).as("checksum"))
           .select(lit(leg).as("leg"), col("source"), col("n_docs"),
             col("sum_chars"), col("checksum"))
-      aggOf("head", TxLog.readMapped(s, table), col("lang"))
-        .unionAll(aggOf("v2", TxLog.readMapped(s, table, Some(2L)),
+      aggOf("head", TxLog.readWithLogSchema(s, table), col("lang"))
+        .unionAll(aggOf("v2", TxLog.readWithLogSchema(s, table, Some(2L)),
           col("lang")))
-        .unionAll(aggOf("v3", TxLog.readMapped(s, table, Some(3L)),
+        .unionAll(aggOf("v3", TxLog.readWithLogSchema(s, table, Some(3L)),
           lit(null).cast("string")))
         .orderBy("leg", "source")
     }),

@@ -50,7 +50,8 @@ import org.apache.spark.sql.types.StructType
   *    an ADD-COLUMN evolution works across versions: pre-evolution files
   *    simply read the new column as null (plain parquet by-name
   *    projection), and time travel to an old version reads with that
-  *    version's own schema.
+  *    version's own schema and column map (COLUMN MAPPING, below:
+  *    every read and write verb takes logical names).
   *  - OPTIMIZE (r12): [[optimize]] bin-packs the head's live data dirs
   *    into one rewritten dir sized by bytes, committing the add and all
   *    removes in ONE atomic commit — table contents are identical at
@@ -472,16 +473,16 @@ object TxLog {
   }
 
   /** One-pass planning snapshot for SINKS: head, live adds, governing
-    * schema, every producer's watermark, and the real-commit suffix (for
-    * the replay-verify) — so a per-batch probe costs exactly one
-    * checkpoint-accelerated planning walk, never several. */
+    * schema and map, every producer's watermark, and the real-commit
+    * suffix (for the replay-verify) — so a per-batch probe costs exactly
+    * one checkpoint-accelerated planning walk, never several. */
   final case class PlanState(head: Option[Long], liveAdds: Seq[AddFile],
       schemaDdl: Option[String], txnWatermarks: Map[String, Long],
-      suffix: Seq[CommitEntry])
+      suffix: Seq[CommitEntry], colmap: Option[Map[String, String]])
 
   def planState(s: SparkSession, table: String): PlanState =
     currentVersion(s, table) match {
-      case None => PlanState(None, Nil, None, Map.empty, Nil)
+      case None => PlanState(None, Nil, None, Map.empty, Nil, None)
       case head @ Some(_) =>
         val (base, suffix) = planParts(s, table, None)
         val entries = base.toSeq ++ suffix
@@ -489,7 +490,7 @@ object TxLog {
           entries.flatMap(_.schemaDdl).lastOption,
           entries.flatMap(_.txns).groupBy(_._1)
             .map { case (a, vs) => a -> vs.map(_._2).max },
-          suffix)
+          suffix, entries.flatMap(_.colmap).lastOption)
     }
 
   /** The highest batch number producer `appId` has durably recorded
@@ -564,9 +565,9 @@ object TxLog {
     val st = planState(s, table) // ONE checkpoint-accelerated walk
     if (verifiedReplay(st, table, appId, batchId, name)) return
     val attempt = s"$name/${java.util.UUID.randomUUID()}"
-    batch.write.parquet(s"$table/$attempt")
-    val (stats, nRows) =
-      statsAndRows(s.read.parquet(s"$table/$attempt"), statsCols)
+    physical(batch, st).write.parquet(s"$table/$attempt")
+    val (stats, nRows) = statsAndRows(s.read.parquet(s"$table/$attempt"),
+      statsCols.map(physName(st.colmap)))
     val add = AddFile(attempt, stats, rows = Some(nRows))
     // Some(v): committed at v; None: another attempt delivered the batch
     @scala.annotation.tailrec
@@ -677,15 +678,16 @@ object TxLog {
     * (the append has no read-set, so retry is always safe). With no
     * expectations this is the plain batch APPEND verb ([[append]]).
     * `statsCols` records per-dir min/max envelopes for data skipping,
-    * as everywhere. Returns the published version. */
+    * as everywhere; expectations see the staged bytes under their
+    * logical names. Returns the published version. */
   def writeAuditPublish(df: DataFrame, table: String, name: String,
       expectations: Seq[(String, org.apache.spark.sql.Column)],
       statsCols: Seq[String] = Nil): Long = {
     val s = df.sparkSession
     require(name.matches("""[A-Za-z0-9._-]+"""),
       s"data dir name '$name' must be a plain path-safe token")
-    val taken = currentVersion(s, table).isDefined &&
-      liveAdds(s, table).exists(_.name == name)
+    val st0 = planState(s, table)
+    val taken = st0.liveAdds.exists(_.name == name)
     require(!taken,
       s"$table: data dir $name is already LIVE — refusing to overwrite " +
         "published data (pick a fresh name)")
@@ -702,13 +704,15 @@ object TxLog {
     val f = fsOf(s, new Path(table))
     val stageName =
       s".stage-$name-${ProcessHandle.current().pid()}-${tmpSeq.incrementAndGet()}"
-    df.write.mode("overwrite").parquet(s"$table/$stageName")
+    physical(df, st0).write.mode("overwrite").parquet(s"$table/$stageName")
     val staged = s.read.parquet(s"$table/$stageName")
     if (expectations.nonEmpty) {
       import org.apache.spark.sql.functions.{sum, when, lit}
       val aggs = expectations.map { case (rule, pred) =>
         sum(when(!pred, 1L).otherwise(0L)).as(rule) }
-      val r = staged.agg(aggs.head, aggs.tail: _*).head()
+      val audited = mapped(st0).fold(staged) { case (sch, m) =>
+        logicalOf(staged, sch, m) }
+      val r = audited.agg(aggs.head, aggs.tail: _*).head()
       val violations = expectations.zipWithIndex.collect {
         case ((rule, _), i) if !r.isNullAt(i) && r.getLong(i) > 0 =>
           s"$rule=${r.getLong(i)}"
@@ -721,7 +725,8 @@ object TxLog {
             "nothing was published, the table is unchanged")
       }
     }
-    val (stats, nRows) = statsAndRows(staged, statsCols)
+    val (stats, nRows) =
+      statsAndRows(staged, statsCols.map(physName(st0.colmap)))
     // the atomic no-overwrite claim (r15, advised: the old non-local
     // branch was a check-then-act exists+rename TOCTOU)
     val claimed = claimExclusive(s, f,
@@ -1172,6 +1177,46 @@ object TxLog {
     }
   }
 
+  /** THE READ STEP: [[scanAdds]] serving the LOGICAL `schema` — with no
+    * column map the plan is unchanged; under one it scans the PHYSICAL
+    * names. A name the map does not know (renamed or dropped since the
+    * caller took its schema) is LOUD, never nulls or dropped bytes. */
+  private[sources] def scanLogical(s: SparkSession, table: String,
+      schema: StructType, adds: Seq[AddFile],
+      colmap: Option[Map[String, String]]): DataFrame = colmap match {
+    case None => scanAdds(s, table, schema, adds)
+    case Some(m) =>
+      schema.fields.foreach(f => require(m.contains(f.name),
+        s"$table: column '${f.name}' is not in the column map " +
+          s"(${m.keys.toSeq.sorted.mkString(", ")}) — renamed or dropped " +
+          "since the read's schema was taken; re-read with the current one"))
+      logicalOf(scanAdds(s, table,
+        StructType(schema.fields.map(f => f.copy(name = m(f.name)))), adds),
+        schema, m)
+  }
+
+  /** `df`'s physical columns under the logical names of `schema`. */
+  private def logicalOf(df: DataFrame, schema: StructType,
+      m: Map[String, String]): DataFrame =
+    df.select(schema.fields.map(f => col(m(f.name)).as(f.name)).toSeq: _*)
+
+  /** A logical name's physical one (itself with no map). */
+  private def physName(colmap: Option[Map[String, String]])(c: String): String =
+    colmap.flatMap(_.get(c)).getOrElse(c)
+
+  /** The governing (logical schema, column map) of a mapped snapshot. */
+  private def mapped(st: PlanState): Option[(StructType, Map[String, String])] =
+    for (m <- st.colmap; d <- st.schemaDdl) yield (StructType.fromDDL(d), m)
+
+  /** THE WRITE STEP: under a column map, `df`'s LOGICAL columns cast to
+    * their recorded types and renamed to PHYSICAL names (files written
+    * before and after a rename are one history); else `df` itself. */
+  private def physical(df: DataFrame, st: PlanState): DataFrame =
+    mapped(st).fold(df) { case (sch, m) =>
+      df.select(sch.fields.map(f =>
+        col(f.name).cast(f.dataType).as(m(f.name))).toSeq: _*)
+    }
+
   /** The recorded schema governing the snapshot at `asOf` (None = head):
     * the latest `{"schema":…}` record at-or-before it. None on a table
     * whose log never recorded one (pre-r12 tables — caller-supplied
@@ -1536,8 +1581,8 @@ object TxLog {
     // every snapshot's logical view) survives compaction; dropped
     // columns' bytes are shed here (they are in no map entry)
     val cmap = cs.flatMap(_.colmap).lastOption
-    val sch = cmap.fold(logicalSch)(m => StructType(logicalSch.fields.map(
-      fl => fl.copy(name = m.getOrElse(fl.name, fl.name)))))
+    val sch = StructType(logicalSch.fields.map(fl =>
+      fl.copy(name = physName(cmap)(fl.name))))
     val f = fsOf(s, new Path(table))
     val bytes = live.map(a =>
       f.getContentSummary(new Path(table, a.name)).getLength).sum
@@ -1640,13 +1685,16 @@ object TxLog {
     * read(head). LOUD when the range contains a REMOVE (an OPTIMIZE /
     * merge rewrote files inside the window): a rewrite is layout, not new
     * data, and silently re-delivering rewritten rows as "changes" is the
-    * one corruption an incremental consumer can't detect itself. */
+    * one corruption an incremental consumer can't detect itself.
+    * `schema` names CURRENT logical columns: every window reads through
+    * the head's column map, as a batch read of the head would. */
   def readChanges(s: SparkSession, table: String, schema: StructType,
       fromVersion: Long, toVersion: Long): DataFrame = {
     val dirs = changeDirs(s, table, fromVersion, toVersion)
     if (dirs.isEmpty)
       s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else s.read.schema(schema).parquet(dirs.map(d => s"$table/$d"): _*)
+    else scanLogical(s, table, schema, dirs.map(AddFile(_)),
+      logColmap(s, table))
   }
 
   /** The data dirs the commits in (`fromVersion`, `toVersion`] added —
@@ -1725,10 +1773,18 @@ object TxLog {
     * must be implied by the caller's own filter — pruning never replaces
     * the filter, it only removes files the filter provably rejects
     * entirely). An empty snapshot reads as an empty frame of the schema,
-    * not an error. */
+    * not an error. Names (schema, skips) are LOGICAL ([[scanLogical]]). */
   def read(s: SparkSession, table: String, schema: StructType,
       asOf: Option[Long] = None,
-      skip: Seq[Skip] = Nil): DataFrame = {
+      skip: Seq[Skip] = Nil): DataFrame =
+    readPlanned(s, table, Some(schema), asOf, skip)
+
+  /** [[read]] (`schema` given) and [[readWithLogSchema]] in ONE
+    * checkpoint-accelerated planning walk — O(suffix), not O(commits)
+    * — yielding the governing schema, column map and live adds. */
+  private def readPlanned(s: SparkSession, table: String,
+      schema: Option[StructType], asOf: Option[Long],
+      skip: Seq[Skip]): DataFrame = {
     val horizon = vacuumHorizon(s, table)
     // the guard only applies on a vacuumed table — on a fresh one a
     // negative asOf must get liveFiles' accurate head-range error, not a
@@ -1736,37 +1792,27 @@ object TxLog {
     if (horizon >= 0) asOf.foreach(v => require(v >= horizon,
       s"$table: v$v was VACUUMED (retention horizon v$horizon) — its " +
         "data files are gone; a silent partial read is not offered"))
-    // checkpoint-accelerated planning: the latest checkpoint ≤ asOf plus
-    // the commit suffix — O(suffix), not O(commits)
     val governed = planEntries(s, table, asOf)
-    governed.flatMap(_.schemaDdl).lastOption.map(StructType.fromDDL).foreach {
-      recorded =>
-        schema.fields.foreach { fld =>
-          val m = recorded.fields.find(_.name == fld.name)
-          require(m.isDefined,
-            s"$table: requested column '${fld.name}' is not in the " +
-              s"recorded schema (${recorded.toDDL}) — drifted read")
-          require(m.get.dataType == fld.dataType,
-            s"$table: column '${fld.name}' is ${m.get.dataType.sql} in the " +
-              s"recorded schema, requested as ${fld.dataType.sql} — " +
-              "drifted read")
-        }
+    val recorded = governed.flatMap(_.schemaDdl).lastOption
+      .map(StructType.fromDDL)
+    for (req <- schema; rec <- recorded; fld <- req.fields) {
+      val m = rec.fields.find(_.name == fld.name)
+      require(m.isDefined,
+        s"$table: requested column '${fld.name}' is not in the " +
+          s"recorded schema (${rec.toDDL}) — drifted read")
+      require(m.get.dataType == fld.dataType,
+        s"$table: column '${fld.name}' is ${m.get.dataType.sql} in the " +
+          s"recorded schema, requested as ${fld.dataType.sql} — " +
+          "drifted read")
     }
-    // COLUMN-MAPPED tables (r15): a requested column whose physical
-    // name differs from its logical one would scan as all-null here —
-    // refuse loudly, the mapped read path resolves it
-    governed.flatMap(_.colmap).lastOption.foreach { cmap =>
-      schema.fields.foreach { fld =>
-        val p = cmap.getOrElse(fld.name, fld.name)
-        require(p == fld.name,
-          s"$table: column '${fld.name}' is COLUMN-MAPPED to physical " +
-            s"'$p' — read through readMapped (a plain scan would serve " +
-            "nulls)")
-      }
-    }
+    val sch = schema.orElse(recorded).getOrElse(
+      throw new IllegalArgumentException(
+        s"$table: no schema recorded in the log (pre-r12 table?) — " +
+          "supply one explicitly via read()"))
+    val cmap = governed.flatMap(_.colmap).lastOption
     // DV-aware: dirs whose add carries a deletion vector anti-join it
-    scanAdds(s, table, schema,
-      pruneAdds(boundedLive(s, table, governed), skip))
+    scanLogical(s, table, sch, pruneAdds(boundedLive(s, table, governed),
+      skip.map(mapSkip(_, physName(cmap)))), cmap)
   }
 
   /** DISTRIBUTED MANIFEST (r13 — the scale half of "checkpoint at
@@ -1788,6 +1834,7 @@ object TxLog {
       throw new IllegalArgumentException(
         s"$table has nothing to manifest — no commits"))
     val st = planState(s, table)
+    refuseMappedManifest(table, st.colmap.isDefined)
     import s.implicits._
     val adds = st.liveAdds
       .map(a => ("add", a.name, a.part, a.stats, a.dv,
@@ -1807,6 +1854,14 @@ object TxLog {
       .write.mode("overwrite").parquet(f"$table/_manifest/v$head%010d")
     head
   }
+
+  /** Manifest names and stats are physical, reads logical: no manifest
+    * is written for a column-mapped head, so none is ever read. */
+  private def refuseMappedManifest(table: String, mapped: Boolean): Unit =
+    require(!mapped,
+      s"$table: a manifest over a column-mapped table is not offered — " +
+        "the manifest's stats and scan are keyed on physical names, the " +
+        "caller's logical; read through read() or readWithLogSchema")
 
   /** INCREMENTAL manifest maintenance (r14 — VERDICT item 3, the
     * million-file half): derive `_manifest/v<head>` from the PREVIOUS
@@ -1844,6 +1899,8 @@ object TxLog {
       case Some(p) =>
         // the commit suffix (p, head] — O(suffix) driver-held actions
         val suffix = ((p + 1) to head).map(v => commitAt(s, table, v))
+        // p was unmapped (refused otherwise): mapped iff the suffix maps
+        refuseMappedManifest(table, suffix.exists(_.colmap.isDefined))
         import s.implicits._
         val prev = s.read.parquet(f"$table/_manifest/v$p%010d")
         val prevAdds = prev.filter(col("kind") === "add")
@@ -1942,7 +1999,7 @@ object TxLog {
     * returns null on junk and `coalesce(…, true)` keeps), and only the
     * surviving names reach the driver. Column names in `skip` must be
     * plain identifiers (they interpolate into manifest expressions —
-    * loud otherwise). */
+    * loud otherwise). A column-mapped head has no manifest: loud. */
   def readViaManifest(s: SparkSession, table: String, schema: StructType,
       skip: Seq[Skip] = Nil): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, lit, expr, not}
@@ -2000,19 +2057,14 @@ object TxLog {
 
   /** Read with the LOG's recorded schema for the snapshot — the
     * schema-evolution read path: time travel to a pre-evolution version
-    * reads with that version's own (narrower) schema; a head read after
-    * an add-column evolution reads pre-evolution files with the new
-    * column as null (plain parquet by-name projection). Throws on a
-    * table whose log never recorded a schema. */
+    * reads with that version's own (narrower) schema and map; a head
+    * read after an add-column evolution reads pre-evolution files with
+    * the new column as null (plain parquet by-name projection). Throws
+    * on a table whose log never recorded a schema. */
   def readWithLogSchema(s: SparkSession, table: String,
       asOf: Option[Long] = None,
-      skip: Seq[Skip] = Nil): DataFrame = {
-    val sch = logSchema(s, table, asOf).getOrElse(
-      throw new IllegalArgumentException(
-        s"$table: no schema recorded in the log (pre-r12 table?) — " +
-          "supply one explicitly via read()"))
-    read(s, table, sch, asOf, skip)
-  }
+      skip: Seq[Skip] = Nil): DataFrame =
+    readPlanned(s, table, None, asOf, skip)
 
   // ======================= COLUMN MAPPING (r15) =======================
   // The Delta/Iceberg rename-and-drop evolution idea, standalone: the
@@ -2026,7 +2078,11 @@ object TxLog {
   // OPTIMIZE); re-ADDING a dropped name mints a FRESH physical identity
   // (`<name>__v<version>`), so the old column's bytes can never leak
   // into the reborn column. Snapshot-scoped like the schema record:
-  // time travel reads with that version's own map.
+  // time travel reads with that version's own map. The map is resolved
+  // at ONE boundary: every verb that reads data dirs goes through the
+  // read step ([[scanLogical]]) and every verb that stages rows through
+  // the write step ([[physical]]), so callers only ever see logical
+  // names; skip bounds and stats columns cross it through [[physName]].
 
   /** The column map governing the snapshot — None on a table that never
     * evolved (logical ≡ physical). */
@@ -2036,16 +2092,17 @@ object TxLog {
 
   private def evolutionState(s: SparkSession,
       table: String): (Long, StructType, Map[String, String]) = {
-    val head = currentVersion(s, table).getOrElse(
+    val st = planState(s, table)
+    val head = st.head.getOrElse(
       throw new IllegalArgumentException(s"$table: empty table"))
-    val sch = logSchema(s, table).getOrElse(
+    val sch = st.schemaDdl.map(StructType.fromDDL).getOrElse(
       throw new IllegalArgumentException(
         s"$table: schema evolution needs a recorded schema"))
-    require(liveAdds(s, table).forall(a => !a.part.contains("__nb")),
+    require(st.liveAdds.forall(a => !a.part.contains("__nb")),
       s"$table: column mapping over a merge-bucketed layout is not " +
         "offered — the bucket hash is keyed on physical columns; " +
         "evolve before the first merge, or rebuild the table")
-    val cmap = logColmap(s, table)
+    val cmap = st.colmap
       .getOrElse(sch.fields.map(f => f.name -> f.name).toMap)
     (head, sch, cmap)
   }
@@ -2122,57 +2179,5 @@ object TxLog {
     case SkipRangeDecimal(c, lo, hi) => SkipRangeDecimal(phys(c), lo, hi)
     case SkipRangeDate(c, lo, hi) => SkipRangeDate(phys(c), lo, hi)
     case SkipPartition(c, vs) => SkipPartition(phys(c), vs)
-  }
-
-  /** Read the snapshot under its COLUMN MAP: scans the physical
-    * columns, serves the logical names — renamed columns read old files
-    * correctly, dropped columns are invisible, a column added after a
-    * file was written reads null there. Skip bounds arrive on LOGICAL
-    * names (the caller's view) and are translated. Falls back to the
-    * plain recorded-schema read on a never-evolved table. */
-  def readMapped(s: SparkSession, table: String,
-      asOf: Option[Long] = None,
-      skip: Seq[Skip] = Nil): DataFrame = {
-    val logical = logSchema(s, table, asOf).getOrElse(
-      throw new IllegalArgumentException(
-        s"$table: no schema recorded in the log — column mapping needs " +
-          "one"))
-    logColmap(s, table, asOf) match {
-      case None => read(s, table, logical, asOf, skip)
-      case Some(cmap) =>
-        def phys(n: String) = cmap.getOrElse(n, n)
-        val horizon = vacuumHorizon(s, table)
-        if (horizon >= 0) asOf.foreach(v => require(v >= horizon,
-          s"$table: v$v was VACUUMED (retention horizon v$horizon) — " +
-            "its data files are gone; a silent partial read is not " +
-            "offered"))
-        val physSchema = StructType(logical.fields.map(f =>
-          f.copy(name = phys(f.name))))
-        val governed = planEntries(s, table, asOf)
-        val df = scanAdds(s, table, physSchema,
-          pruneAdds(boundedLive(s, table, governed),
-            skip.map(mapSkip(_, phys))))
-        df.select(logical.fields.map(f =>
-          col(phys(f.name)).as(f.name)).toSeq: _*)
-    }
-  }
-
-  /** Append under the COLUMN MAP: `df` carries the snapshot's LOGICAL
-    * columns; the staged parquet stores the physical names, so files
-    * written before and after a rename are one coherent physical
-    * history. `statsCols` are logical too. Returns the version. */
-  def appendMapped(df: DataFrame, table: String, name: String,
-      statsCols: Seq[String] = Nil): Long = {
-    val s = df.sparkSession
-    val logical = logSchema(s, table).getOrElse(
-      throw new IllegalArgumentException(
-        s"$table: no schema recorded in the log — appendMapped needs " +
-          "one"))
-    val cmap = logColmap(s, table)
-      .getOrElse(logical.fields.map(f => f.name -> f.name).toMap)
-    def phys(n: String) = cmap.getOrElse(n, n)
-    val physDf = df.select(logical.fields.map(f =>
-      col(f.name).cast(f.dataType).as(phys(f.name))).toSeq: _*)
-    append(physDf, table, name, statsCols.map(phys))
   }
 }

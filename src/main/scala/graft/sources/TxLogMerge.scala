@@ -95,7 +95,7 @@ object TxLogMerge {
     val head = st.head.getOrElse(throw new IllegalArgumentException(
       s"$table: nothing to merge into — empty table (commit a snapshot " +
         "first, or use the streaming sink)"))
-    require(TxLog.logColmap(s, table).isEmpty,
+    require(st.colmap.isEmpty,
       s"$table: MERGE over a column-mapped table is not offered — the " +
         "merge's schema/keys are logical, the files physical; evolve " +
         "append-only tables, or rebuild before merging")
@@ -472,7 +472,8 @@ object TxLogMerge {
     *  - an APPEND / WAP publish / stream batch marks `@adds`: the
     *    commit's add dirs ARE the change set, served as inserts with
     *    zero extra bytes written — a follower of a mixed append+merge
-    *    table no longer stops at the appends;
+    *    table no longer stops at the appends (names as in
+    *    [[TxLog.readChanges]]);
     *  - an OPTIMIZE marks `@none`: layout, not data — an EMPTY feed,
     *    so a follower passes through compactions;
     *  - no marker (a merge without changeFeed, legacy commits): LOUD —
@@ -496,11 +497,11 @@ object TxLogMerge {
         s.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](), out)
       case Some("@adds") =>
-        val dirs = commit.adds.map(_.name)
-        if (dirs.isEmpty)
+        if (commit.adds.isEmpty)
           s.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row](), out)
-        else s.read.schema(schema).parquet(dirs.map(d => s"$table/$d"): _*)
+        else TxLog.scanLogical(s, table, schema, commit.adds,
+            TxLog.logColmap(s, table))
           .withColumn("_change_type", lit("insert"))
       case Some(dir) =>
         val p = s"$table/$dir"

@@ -196,12 +196,7 @@ class TxLogTable(val table: String, tableSchema: StructType,
                   data.toDF(sch.fieldNames.toIndexedSeq: _*)
                 case _ => data
               }
-              // a COLUMN-MAPPED table stores physical names (r15):
-              // route through the mapped append so files written before
-              // and after a rename share one physical history
-              if (TxLog.logColmap(s, table).isDefined)
-                TxLog.appendMapped(aligned, table, name)
-              else TxLog.append(aligned, table, name)
+              TxLog.append(aligned, table, name)
               ()
             }
           }
@@ -441,19 +436,9 @@ class TxLogScan(s: SparkSession, table: String, full: StructType,
         // the inner read re-prunes with the same skips (idempotent) and
         // projects the required columns only — parquet footer pushdown
         // and whole-stage codegen apply inside this plan untouched.
-        // COLUMN-MAPPED tables (r15) route through readMapped: the scan
-        // asks for LOGICAL names; the mapped read resolves them to the
-        // files' stable physical identities (a plain read would refuse)
-        val mapped = TxLog.logColmap(s, table, asOf).isDefined
+        // Names are LOGICAL; the read resolves a column map itself
         val base =
-          if (mapped) {
-            val all = TxLog.readMapped(s, table, asOf, skips)
-            if (required.fields.nonEmpty)
-              all.select(required.fields.map(f =>
-                org.apache.spark.sql.functions.col(f.name)).toSeq: _*)
-            else all.select()
-          }
-          else if (required.fields.nonEmpty)
+          if (required.fields.nonEmpty)
             TxLog.read(s, table, required, asOf, skips)
           else // 0-column scans (COUNT(*)) still need the row count
             TxLog.read(s, table, StructType(full.fields.take(1)), asOf,

@@ -187,7 +187,7 @@ object CdcStream {
     * checkpoint-recovery replay verifies and skips: exactly-once from
     * checkpointed source offsets plus batch-keyed commits. Read the live
     * rows (at any version) with `TxLogMaterialize.snapshot`, tombstones
-    * included with `TxLog.readWithLogSchema`. */
+    * included with `TxLog.readWithLogSchema` (one log walk, map-aware). */
   def materializeSnapshot(
       changes: Dataset[Change], table: String, checkpointDir: String): StreamingQuery =
     changes.toDF().writeStream
